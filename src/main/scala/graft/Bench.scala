@@ -96,31 +96,43 @@ object Bench {
     // source dir → different plans and caches; no measured-SF data or
     // cached frame is reused.
     val warmDir = "/root/testdata/sf0.001"
-    try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    selected.foreach { case (_, fn) =>
-      try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+    // a warm-up failure is not fatal (the timed run records the query
+    // as failed) but must stay visible
+    try force(SparkEntry.entry(spark))
+    catch { case e: Throwable => System.err.println(s"[bench] warm-up entry failed: $e") }
+    selected.foreach { case (name, fn) =>
+      try force(fn(spark, warmDir))
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $name failed: $e") }
     }
+    // A failed set-up step leaves its queries to build on first use,
+    // inside their timed repeats: record it by step name in the artifact
+    // (`setup_failed`) and on stderr rather than hide it.
+    val setupFailed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def setup(step: String)(body: => Unit): Unit =
+      try body
+      catch {
+        case e: Throwable =>
+          setupFailed += step
+          System.err.println(s"[bench] setup $step failed: $e")
+      }
     // Materialize the rollup tiers up front (on a deployment the cascade
     // is a scheduled background job that has always already run when a
     // query arrives — queries read summary tables, never raw data). The
     // build cost is reported separately below, not hidden.
     val tierBuild = {
       val t0 = System.nanoTime()
-      try graft.planner.MaterializedTiers.ensure(spark, sfDir)
-      catch { case _: Throwable => () }
+      setup("tiers") { graft.planner.MaterializedTiers.ensure(spark, sfDir) }
       // bucketed-table setup is the same kind of one-time amortized
       // write as the tiers: build it here so q9's first timed repeat
       // measures the join, not the bucket-table write (the r6 artifact
       // showed a 14x first-iteration spread on q9 from exactly this)
-      try graft.ops.Bucketing.ensureOrderTables(spark, sfDir)
-      catch { case _: Throwable => () }
+      setup("bucketing") { graft.ops.Bucketing.ensureOrderTables(spark, sfDir) }
       // the persisted PQ index the e_pq_*_serve rows answer from is
       // built at ingest time on a deployment — build it here once so
       // every timed repeat measures the serve path, not index training
       // (the r12 artifact's largest variance source was exactly this:
       // a full retrain per invocation)
-      try { graft.queries.PqServeStores.ensure(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      setup("pq_index") { graft.queries.PqServeStores.ensure(spark, sfDir) }
       (System.nanoTime() - t0) / 1e9
     }
     // Repeat mode (SPARK_GRAFT_REPEAT=N, default 3): every query timed
@@ -184,6 +196,7 @@ object Bench {
     val subsetStats = ok.filter(s => SubsetE(s.name))
     val subsetSum = subsetStats.map(_.headline).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val setupFailedJson = setupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // ---- complete artifact on disk (never truncated) ----
     def m(f: Stat => Double) =
@@ -195,6 +208,7 @@ object Bench {
       s""""n_queries":${stats.size},"failed":$failedJson,""" +
       s""""subset_e_sum":${fmt(subsetSum)},"subset_e_n":${subsetStats.size},""" +
       s""""tier_build_sec":${fmt(tierBuild)},"repeat":$repeat,"sf":"$sfDir",""" +
+      s""""setup_failed":$setupFailedJson,""" +
       s""""queries":${m(_.headline)},"queries_min":${m(_.mn)},""" +
       s""""queries_median":${m(_.md)},"queries_max":${m(_.mx)}}"""
     try {

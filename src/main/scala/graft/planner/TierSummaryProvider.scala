@@ -43,17 +43,16 @@ object MaterializedTiers {
 
   // Keyed by the session OBJECT (not an identity hash, which can
   // collide across session churn and would hand a new session a
-  // provider bound to a stopped one). As in EventMetricStore, weak
-  // keying alone cannot reclaim entries — providers reference their
+  // provider bound to a stopped one). Weak keying alone cannot
+  // reclaim entries — providers reference their
   // session, pinning the key — so lifecycle is explicit: a context-end
   // hook clears the map and [[invalidate]] retires a session early.
   private val providers = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, TierSummaryProvider]]())
 
-  // One cleanup listener per SparkContext (a per-entry listener would
-  // pin every churned session and stack duplicates — see
-  // EventMetricStore's twin note).
+  // One cleanup listener per SparkContext: a per-entry listener would
+  // close over its session and pin every churned session on the bus.
   private val hooked = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
 

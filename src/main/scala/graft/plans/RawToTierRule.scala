@@ -34,7 +34,7 @@ import graft.sketch.HdrSketchAgg
   * scan of `tier_3600000` (one row per metric-hour) instead of merging
   * 720× the rows. Sketch merge is associative and the cascade
   * materializes exactly this aggregate ([[graft.rollup.Rollup
-  * .histogramTierUp]]), so the rewrite is result-identical whenever
+  * .tierUp]]), so the rewrite is result-identical whenever
   * the target tier is CURRENT for the source's closed buckets.
   *
   * OPT-IN: set `spark.graft.tiers.autoRoute` to the [[graft.sources

@@ -26,7 +26,7 @@ object MetricsQueries {
       col("event_type").as("metric"), col("ts_ms"), lit(1L).as("value"))
     // same 5 s → 30 s → 1 m chain, aligned on one (metric, 1 m-bucket)
     // exchange (r15 optimization: was one Exchange per step)
-    Rollup.counterCascadeAlignedTop(counts, Seq(30000L, 60000L))
+    Rollup.cascadeAlignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
       .orderBy("metric", "bucket_start")
   }
 
@@ -34,7 +34,7 @@ object MetricsQueries {
   def hdrSummary5m(spark: SparkSession, dir: String): DataFrame = {
     // same 5 s → 30 s → 1 m → 5 m merge chain, aligned on one
     // (metric, 5 m-bucket) exchange (r15: was one Exchange per step)
-    val t5m = Rollup.histogramCascadeAlignedTop(
+    val t5m = Rollup.cascadeAlignedTop(Rollup.Histogram,
       measurements(spark, dir), Seq(30000L, 60000L, 300000L))
     Rollup.histogramSummaries(t5m).orderBy("metric", "bucket_start")
   }
@@ -44,7 +44,7 @@ object MetricsQueries {
   def hdrSummary1h(spark: SparkSession, dir: String): DataFrame = {
     // full standard cascade, aligned on one (metric, 1 h-bucket)
     // exchange (r15: was one Exchange per step — 8 total)
-    val top = Rollup.histogramCascadeAlignedTop(measurements(spark, dir))
+    val top = Rollup.cascadeAlignedTop(Rollup.Histogram, measurements(spark, dir))
     Rollup.histogramSummaries(top).orderBy("metric", "bucket_start")
   }
 
@@ -90,7 +90,7 @@ object MetricsQueries {
     val meas = Tables.events(spark, dir).select(
       col("event_type").as("metric"), col("ts_ms"),
       floor(col("value") * 100).cast("long").as("value"))
-    val top = Rollup.histogramCascadeAlignedTop(meas)
+    val top = Rollup.cascadeAlignedTop(Rollup.Histogram, meas)
     Rollup.histogramSummaries(top)
       .select("metric", "bucket_start", "count", "min", "max", "p50", "p99")
       .orderBy("metric", "bucket_start")

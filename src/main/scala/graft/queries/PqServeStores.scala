@@ -42,7 +42,7 @@ import graft.ops.PqIndexStore
   * then by sfDir: the bench warms at sf0.001 and times at sf0.1, and
   * the two must never share an index.
   *
-  * Weak keying alone cannot reclaim entries (the EventMetricStore
+  * Weak keying alone cannot reclaim entries (the MaterializedTiers
   * rule): a cached PqIndexStore strongly references its SparkSession
   * key, so the value pins the key. Lifecycle is therefore explicit —
   * one context-end listener per SparkContext clears the whole map

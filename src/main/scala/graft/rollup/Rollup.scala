@@ -1,6 +1,6 @@
 package graft.rollup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{ensureRegistered, hdr_merge, hdr_sketch, hdr_summary}
 
@@ -13,6 +13,12 @@ import graft.functions.{ensureRegistered, hdr_merge, hdr_sketch, hdr_summary}
   * ("percentiles are computed by merging histograms, never by averaging
   * percentiles", reference README.md:23).
   *
+  * Each tier kind ([[Histogram]], [[Counter]]) is defined once here, as
+  * the reference's one generic `TimeWindow` stage is; every driver —
+  * [[RollupJob]], the streaming increments, the k_* queries — calls
+  * [[rawTier]], [[tierUp]] or [[cascadeAlignedTop]] and only chooses how
+  * to materialize the frames.
+  *
   * Scale design: every stage is one `groupBy(metric, bucket)` over data
   * already collapsed to one row per (metric, finer-bucket) — after the
   * 5 s pre-aggregation the data volume is bounded by
@@ -22,6 +28,25 @@ import graft.functions.{ensureRegistered, hdr_merge, hdr_sketch, hdr_summary}
   * is pure integer arithmetic on the partition key's companion column.
   */
 object Rollup {
+
+  /** What a tier kind decides: its value column, the aggregate that
+    * builds it from measurement values, the aggregate that merges a
+    * finer tier of it, and whether negative values are dropped. */
+  sealed abstract class Kind(val column: String, raw: Column => Column,
+                             merge: Column => Column, dropsNegatives: Boolean) {
+    def rawAgg: Column = raw(col("value")).as(column)
+    def mergeAgg: Column = merge(col(column)).as(column)
+    private[rollup] def admit(measurements: DataFrame): DataFrame =
+      if (dropsNegatives) measurements.where(col("value") >= 0) else measurements
+  }
+
+  /** Timers and gauges: one HDR sketch per bucket; negative values are
+    * skipped, as the reference skips them on ingest. */
+  case object Histogram extends Kind("sketch", hdr_sketch, hdr_merge, dropsNegatives = true)
+
+  /** Counters: the measured value is the increment, and counts add
+    * (reference: model/CounterBucket.scala). */
+  case object Counter extends Kind("count", sum(_), sum(_), dropsNegatives = false)
 
   /** Standard tier durations, smallest→largest (reference:
     * reference.conf:11). Milliseconds. */
@@ -35,48 +60,34 @@ object Rollup {
   def bucketOf(tsMs: Column, durationMs: Long): Column =
     (tsMs - pmod(tsMs, lit(durationMs))).cast("long")
 
-  /** Measurements (metric, ts_ms, value:Long) → raw 5 s histogram tier
-    * (metric, bucket_start, sketch). */
-  def rawHistogramTier(measurements: DataFrame): DataFrame = {
+  /** Measurements (metric, ts_ms, value:Long) → raw 5 s tier
+    * (metric, bucket_start, kind.column). */
+  def rawTier(kind: Kind, measurements: DataFrame): DataFrame = {
     ensureRegistered(measurements.sparkSession)
-    measurements
-      .where(col("value") >= 0) // reference skips negatives on ingest
+    kind.admit(measurements)
       .groupBy(col("metric"), bucketOf(col("ts_ms"), RawGroupMs).as("bucket_start"))
-      .agg(hdr_sketch(col("value")).as("sketch"))
+      .agg(kind.rawAgg)
   }
 
-  /** One cascade step: histogram tier at a finer resolution → tier at
-    * `durationMs` (merge sketches under the coarser bucket). */
-  def histogramTierUp(prev: DataFrame, durationMs: Long): DataFrame = {
+  /** One cascade step: a tier at a finer resolution → the tier at
+    * `durationMs` (merge under the coarser bucket). */
+  def tierUp(kind: Kind, prev: DataFrame, durationMs: Long): DataFrame = {
     ensureRegistered(prev.sparkSession)
     prev.groupBy(col("metric"), bucketOf(col("bucket_start"), durationMs).as("bucket_start"))
-      .agg(hdr_merge(col("sketch")).as("sketch"))
-  }
-
-  /** Full cascade from the raw tier: returns tiers keyed by duration. */
-  def histogramCascade(raw: DataFrame,
-                       tiers: Seq[Long] = StandardTiers): Map[Long, DataFrame] = {
-    val out = scala.collection.mutable.LinkedHashMap[Long, DataFrame]()
-    var prev = raw
-    tiers.foreach { d =>
-      val t = histogramTierUp(prev, d)
-      out(d) = t
-      prev = t
-    }
-    out.toMap
+      .agg(kind.mergeAgg)
   }
 
   /** One-exchange cascade to the TOP tier (optimization guide §2.4:
-    * operations keyed the same way share one exchange). The plain
-    * [[histogramCascade]] pays one Exchange per step because each step
-    * regroups by a different bucket expression; here the coarsest
-    * tier's bucket is computed up front, the input is hash-partitioned
-    * ONCE by (metric, top-bucket), and every step groups by
+    * operations keyed the same way share one exchange). Chaining
+    * [[tierUp]] pays one Exchange per step because each step regroups
+    * by a different bucket expression; here the coarsest tier's bucket
+    * is computed up front, the input is hash-partitioned ONCE by
+    * (metric, top-bucket), and every step groups by
     * (metric, top-bucket, step-bucket). The carried top-bucket is
     * functionally determined by every finer step's bucket (each step
     * duration divides the top duration — required below), so group
     * contents — and therefore every merged sketch — are bit-identical
-    * to the plain cascade, while hashpartitioning(metric, top-bucket)
+    * to the [[tierUp]] chain, while hashpartitioning(metric, top-bucket)
     * satisfies each step's ClusteredDistribution and no further
     * Exchange is planned: 1 exchange for the whole chain instead of
     * 1 + |tiers|.
@@ -86,8 +97,8 @@ object Rollup {
     * at corpus scale the partition grain is (metric × top window) —
     * the cascade's natural parallelism, so a single hot metric still
     * spreads across its time windows rather than one partition. */
-  def histogramCascadeAlignedTop(measurements: DataFrame,
-                                 tiers: Seq[Long] = StandardTiers): DataFrame = {
+  def cascadeAlignedTop(kind: Kind, measurements: DataFrame,
+                        tiers: Seq[Long] = StandardTiers): DataFrame = {
     ensureRegistered(measurements.sparkSession)
     require(tiers.nonEmpty, "tiers must be non-empty")
     val top = tiers.last
@@ -95,45 +106,19 @@ object Rollup {
       s"every tier duration must divide the top tier ($top ms) for the " +
         s"carried top-bucket to be functionally dependent: $tiers")
     require(tiers == tiers.sorted, s"tiers must ascend: $tiers")
-    var prev = measurements
-      .where(col("value") >= 0) // reference skips negatives on ingest
+    var prev = kind.admit(measurements)
       .withColumn("__top", bucketOf(col("ts_ms"), top))
       .repartition(col("metric"), col("__top"))
       .groupBy(col("metric"), col("__top"),
         bucketOf(col("ts_ms"), RawGroupMs).as("bucket_start"))
-      .agg(hdr_sketch(col("value")).as("sketch"))
+      .agg(kind.rawAgg)
     tiers.init.foreach { d =>
       prev = prev.groupBy(col("metric"), col("__top"),
           bucketOf(col("bucket_start"), d).as("bucket_start"))
-        .agg(hdr_merge(col("sketch")).as("sketch"))
+        .agg(kind.mergeAgg)
     }
     prev.groupBy(col("metric"), col("__top").as("bucket_start"))
-      .agg(hdr_merge(col("sketch")).as("sketch"))
-  }
-
-  /** Counter twin of [[histogramCascadeAlignedTop]]: one exchange, all
-    * cascade steps grouped under the carried top bucket. No negative
-    * filter — counter increments pass through like [[counterTier]]. */
-  def counterCascadeAlignedTop(measurements: DataFrame,
-                               tiers: Seq[Long]): DataFrame = {
-    require(tiers.nonEmpty, "tiers must be non-empty")
-    val top = tiers.last
-    require(tiers.forall(top % _ == 0) && top % RawGroupMs == 0,
-      s"every tier duration must divide the top tier ($top ms): $tiers")
-    require(tiers == tiers.sorted, s"tiers must ascend: $tiers")
-    var prev = measurements
-      .withColumn("__top", bucketOf(col("ts_ms"), top))
-      .repartition(col("metric"), col("__top"))
-      .groupBy(col("metric"), col("__top"),
-        bucketOf(col("ts_ms"), RawGroupMs).as("bucket_start"))
-      .agg(sum(col("value")).as("count"))
-    tiers.init.foreach { d =>
-      prev = prev.groupBy(col("metric"), col("__top"),
-          bucketOf(col("bucket_start"), d).as("bucket_start"))
-        .agg(sum(col("count")).as("count"))
-    }
-    prev.groupBy(col("metric"), col("__top").as("bucket_start"))
-      .agg(sum(col("count")).as("count"))
+      .agg(kind.mergeAgg)
   }
 
   /** Bucket tier → summary table: one wide row per (metric, bucket)
@@ -149,19 +134,6 @@ object Rollup {
     tier.select(col("metric"), col("bucket_start"),
       inline(array(hdr_summary(col("sketch")))))
   }
-
-  /** Counter path: measurements (metric, ts_ms, value) → counts per
-    * bucket (reference: model/CounterBucket.scala). value is the count
-    * increment; a bare event row counts 1. */
-  def counterTier(measurements: DataFrame, durationMs: Long): DataFrame =
-    measurements
-      .groupBy(col("metric"), bucketOf(col("ts_ms"), durationMs).as("bucket_start"))
-      .agg(sum(col("value")).as("count"))
-
-  /** Counter tier k-1 → tier k: counts just add. */
-  def counterTierUp(prev: DataFrame, durationMs: Long): DataFrame =
-    prev.groupBy(col("metric"), bucketOf(col("bucket_start"), durationMs).as("bucket_start"))
-      .agg(sum(col("count")).as("count"))
 
   /** Events table → timer-style measurements: metric = event_type,
     * value = floor(value) as Long (reference coerces to Long on ingest). */

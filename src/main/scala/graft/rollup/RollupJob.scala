@@ -45,6 +45,12 @@ object RollupJob {
     //    workers in the reference cluster.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // Every lane is waited for before run returns, failed or not: a lane
+    // left running would keep writing into outDir after the caller saw
+    // the failure (MaterializedTiers.ensure deletes a partial outDir on
+    // its next call), and its cached frames could not be released.
+    val lanes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def lane(f: Future[Unit]): Unit = lanes += f
     try {
 
     // histogram cascade: raw 5s + standard tiers, each persisted.
@@ -55,33 +61,31 @@ object RollupJob {
       .where(col("event_type") === "view")
       .selectExpr("'view_gauge' AS metric", "ts_ms",
         "CAST(floor(value) AS BIGINT) AS value")
-    val raw = keep(Rollup.rawHistogramTier(meas.unionAll(gauges)))
-    val rawWrite = Future(store.append("hist", Rollup.RawGroupMs, raw))
+    val raw = keep(Rollup.rawTier(Rollup.Histogram, meas.unionAll(gauges)))
+    lane(Future(store.append("hist", Rollup.RawGroupMs, raw)))
     var prev = raw
-    val histWrites = Rollup.StandardTiers.map { d =>
-      val tier = keep(Rollup.histogramTierUp(prev, d))
+    Rollup.StandardTiers.foreach { d =>
+      val tier = keep(Rollup.tierUp(Rollup.Histogram, prev, d))
       prev = tier
-      Future(store.append("hist", d, tier)).map { _ =>
+      lane(Future(store.append("hist", d, tier)).map { _ =>
         store.append("hist_summary", d, Rollup.histogramSummaries(tier))
-      }
+      })
     }
 
     // counter cascade from event counts
     val counts = Tables.events(spark, sfDir).selectExpr(
       "event_type || '_count' AS metric", "ts_ms", "CAST(1 AS BIGINT) AS value")
-    val counterWrites = {
-      var cprev = keep(Rollup.counterTier(counts, Rollup.RawGroupMs))
-      val first = Future(store.append("counter", Rollup.RawGroupMs, cprev))
-      first +: Rollup.StandardTiers.map { d =>
-        val tier = keep(Rollup.counterTierUp(cprev, d))
-        cprev = tier
-        Future(store.append("counter", d, tier))
-      }
+    var cprev = keep(Rollup.rawTier(Rollup.Counter, counts))
+    lane(Future(store.append("counter", Rollup.RawGroupMs, cprev)))
+    Rollup.StandardTiers.foreach { d =>
+      val tier = keep(Rollup.tierUp(Rollup.Counter, cprev, d))
+      cprev = tier
+      lane(Future(store.append("counter", d, tier)))
     }
 
     // metric catalog (the reference's meta table: metrics register on
     // first sight during ingest — store/MetricMeasurementStore.scala:111-120)
-    val metaWrite = Future {
+    lane(Future {
       val meta = Tables.events(spark, sfDir).select(col("event_type")).distinct()
         .selectExpr("event_type AS name", "'timer' AS mtype")
         .unionAll(Tables.events(spark, sfDir).select(col("event_type")).distinct()
@@ -89,11 +93,13 @@ object RollupJob {
         .unionAll(spark.sql("SELECT 'view_gauge' AS name, 'gauge' AS mtype"))
       meta.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$outDir/meta")
+    })
+    } finally {
+      lanes.foreach(Await.ready(_, Duration.Inf))
+      cached.foreach(_.unpersist(blocking = false))
+      pool.shutdown()
     }
-
-    (rawWrite +: (histWrites ++ counterWrites :+ metaWrite))
-      .foreach(Await.result(_, Duration.Inf))
-    cached.foreach(_.unpersist(blocking = false))
-    } finally pool.shutdown()
+    // every lane has stopped; surface the first failure
+    lanes.foreach(Await.result(_, Duration.Inf))
   }
 }

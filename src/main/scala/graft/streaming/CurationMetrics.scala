@@ -111,10 +111,10 @@ object CurationMetrics {
     // localCheckpoint: the measurement frame materializes once; every
     // tier and the catalog derive from it
     val meas = measurements.localCheckpoint()
-    var prev = Rollup.counterTier(meas, Rollup.RawGroupMs).localCheckpoint()
+    var prev = Rollup.rawTier(Rollup.Counter, meas).localCheckpoint()
     tmpStore.append("counter", Rollup.RawGroupMs, prev)
     Rollup.StandardTiers.foreach { d =>
-      prev = Rollup.counterTierUp(prev, d).localCheckpoint()
+      prev = Rollup.tierUp(Rollup.Counter, prev, d).localCheckpoint()
       tmpStore.append("counter", d, prev)
     }
     meas.select(col("metric")).distinct()

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.functions.{ensureRegistered, hdr_merge, hdr_sketch}
+import graft.functions.ensureRegistered
 import graft.ingest.MetricBatchIngest
 import graft.rollup.Rollup
 import graft.sources.TierStore
@@ -46,34 +46,25 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
 
   def rawTierPath = s"$baseDir/tier_raw"
   def tierPath(d: Long) = store.path(StreamingIngest.HistKind, d)
-  import StreamingIngest.{CounterKind, HistKind, SchemaSidecar}
+  import StreamingIngest.{CounterKind, HistKind, MaxBytesPerTrigger, SchemaSidecar}
   private def cursorPath(kind: String, d: Long) = s"$baseDir/cursor_${kind}_$d"
 
   /** JSON-lines file stream → parsed measurements stream.
     *
-    * Admission is BYTES-based by default (r14, the §H burst fix): a
-    * static `maxFilesPerTrigger` gates a many-small-files burst by
-    * FILE COUNT — §H measured an instantaneous 800-file burst paying
-    * ⌈800/64⌉ = 13 triggers of admission alone (92.4 s freshness
-    * against a 30 s-class envelope) even though the files held only a
-    * few MB. Bytes admission sizes each micro-batch by the work it
-    * actually carries: a burst of small files lands in one trigger, a
-    * flood of big ones is still bounded at `maxBytesPerTrigger` per
-    * batch — which is also the right knob at 100 TB, where file sizes
-    * vary by orders of magnitude across producers. Pass
-    * `maxFilesPerTrigger = Some(n)` to restore count-based admission
-    * (the two knobs are mutually exclusive in the Spark file source,
-    * so setting both refuses loudly). */
+    * Admission is BYTES-based (r14, the §H burst fix): a static
+    * `maxFilesPerTrigger` gates a many-small-files burst by FILE COUNT —
+    * §H measured an instantaneous 800-file burst paying ⌈800/64⌉ = 13
+    * triggers of admission alone (92.4 s freshness against a 30 s-class
+    * envelope) even though the files held only a few MB. Bytes
+    * admission sizes each micro-batch by the work it actually carries:
+    * a burst of small files lands in one trigger, a flood of big ones
+    * is still bounded at [[StreamingIngest.MaxBytesPerTrigger]] per
+    * batch — which is also the right bound at 100 TB, where file sizes
+    * vary by orders of magnitude across producers. */
   def readJsonStream(inputDir: String,
-                     defaultTs: () => Long = () => System.currentTimeMillis(),
-                     maxBytesPerTrigger: Option[Long] = Some(64L << 20),
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    require(maxBytesPerTrigger.isEmpty || maxFilesPerTrigger.isEmpty,
-      "maxBytesPerTrigger and maxFilesPerTrigger are mutually exclusive " +
-        "(Spark file-source admission takes one limit)")
+                     defaultTs: () => Long = () => System.currentTimeMillis()): DataFrame = {
     val reader = spark.readStream.format("text")
-    maxBytesPerTrigger.foreach(b => reader.option("maxBytesPerTrigger", b.toString))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
+      .option("maxBytesPerTrigger", MaxBytesPerTrigger.toString)
     MetricBatchIngest.parse(reader.load(inputDir), "value", defaultTs)
   }
 
@@ -82,33 +73,32 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
     * once, when the watermark passes it — the reference's
     * "bucket closed" condition. */
   def startRawTier(measurements: DataFrame,
-                   trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery = {
-    val withTs = measurements
-      .where(col("mtype") === "timer" || col("mtype") === "gauge")
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("ts", watermark)
-    val agg = withTs
-      .groupBy(col("metric"), window(col("ts"), "5 seconds"))
-      .agg(hdr_sketch(col("value")).as("sketch"))
-      .select(col("metric"),
-        unix_millis(col("window.start")).as("bucket_start"), col("sketch"))
-    startTierSink(agg, trigger, s"$baseDir/_checkpoint_raw", rawTierPath)
-  }
+                   trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
+    startRawSink(Rollup.Histogram,
+      measurements.where(col("mtype") === "timer" || col("mtype") === "gauge"),
+      trigger, s"$baseDir/_checkpoint_raw", rawTierPath)
 
   /** Counter path: counts per 5 s bucket (reference:
     * model/CounterBucket.scala — the measured value IS the increment). */
   def startCounterTier(measurements: DataFrame,
-                       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery = {
-    val withTs = measurements
-      .where(col("mtype") === "counter")
+                       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
+    startRawSink(Rollup.Counter, measurements.where(col("mtype") === "counter"),
+      trigger, s"$baseDir/_checkpoint_counter_raw", counterRawTierPath)
+
+  /** One raw sink body for both kinds: the kind's raw aggregate over
+    * watermarked 5 s windows. [[MetricBatchIngest.parse]] has already
+    * skipped negative values, so the kind's batch admission filter is
+    * not re-applied here. */
+  private def startRawSink(kind: Rollup.Kind, measurements: DataFrame, trigger: Trigger,
+                           checkpoint: String, path: String): StreamingQuery = {
+    val agg = measurements
       .withColumn("ts", timestamp_millis(col("ts_ms")))
       .withWatermark("ts", watermark)
-    val agg = withTs
       .groupBy(col("metric"), window(col("ts"), "5 seconds"))
-      .agg(sum(col("value")).as("count"))
+      .agg(kind.rawAgg)
       .select(col("metric"),
-        unix_millis(col("window.start")).as("bucket_start"), col("count"))
-    startTierSink(agg, trigger, s"$baseDir/_checkpoint_counter_raw", counterRawTierPath)
+        unix_millis(col("window.start")).as("bucket_start"), col(kind.column))
+    startTierSink(agg, trigger, checkpoint, path)
   }
 
   /** Date-partitioned streaming parquet sink (same layout TierStore
@@ -151,25 +141,20 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
 
   /** Counter cascade increment: counts just add. */
   def runCounterCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    cascade(CounterKind, counterRawTierPath, counterTierPath, tiers) { slice =>
-      slice.agg(sum(col("count")).as("count"))
-    }
+    cascade(Rollup.Counter, CounterKind, counterRawTierPath, counterTierPath, tiers)
 
   /** One incremental cascade pass: for each tier (smallest→largest),
     * roll fully-closed source buckets past the tier's cursor into the
     * tier table, then advance the cursor — the reference's
     * TimeWindowChain, as idempotent batch increments over parquet. */
   def runCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    cascade(HistKind, rawTierPath, tierPath, tiers) { slice =>
-      slice.agg(hdr_merge(col("sketch")).as("sketch"))
-    }
+    cascade(Rollup.Histogram, HistKind, rawTierPath, tierPath, tiers)
 
-  private def cascade(kind: String, rawPath: String, tierOf: Long => String,
-                      tiers: Seq[Long])
-                     (agg: org.apache.spark.sql.RelationalGroupedDataset => DataFrame): Unit = {
+  private def cascade(kind: Rollup.Kind, storeKind: String, rawPath: String,
+                      tierOf: Long => String, tiers: Seq[Long]): Unit = {
     var sourcePath = rawPath
     tiers.foreach { d =>
-      val cursor = readCursor(kind, d)
+      val cursor = readCursor(storeKind, d)
       spark.catalog.refreshByPath(sourcePath)
       // a bucket of duration d is closed once the source tier holds
       // nothing before its end; process (cursor, maxClosed]. The probe
@@ -182,12 +167,9 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
       if (!maxSource.isNullAt(0)) {
         val closedUpTo = (maxSource.getLong(0) / d) * d - 1 // last fully closed bucket end
         if (closedUpTo > cursor) {
-          val increment = agg(
-            readSlice(sourcePath, cursor, closedUpTo)
-              .groupBy(col("metric"),
-                Rollup.bucketOf(col("bucket_start"), d).as("bucket_start")))
-          store.append(kind, d, increment)
-          writeCursor(kind, d, closedUpTo)
+          store.append(storeKind, d,
+            Rollup.tierUp(kind, readSlice(sourcePath, cursor, closedUpTo), d))
+          writeCursor(storeKind, d, closedUpTo)
         }
       }
       sourcePath = tierOf(d)
@@ -293,10 +275,18 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
       .getOrElse(Long.MinValue)
   }
 
+  /** Atomic replace: the value lands in a temp file of the same
+    * directory and is renamed over the cursor. A write killed midway
+    * leaves only the temp file, never a truncated cursor that still
+    * parses — a shorter number would re-roll already-rolled buckets,
+    * doubling counts and merging sketches twice. */
   private def writeCursor(kind: String, d: Long, v: Long): Unit = {
-    val p = java.nio.file.Paths.get(cursorPath(kind, d))
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p, v.toString.getBytes)
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val p = Paths.get(cursorPath(kind, d))
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    Files.write(tmp, v.toString.getBytes)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }
 
@@ -310,4 +300,7 @@ object StreamingIngest {
 
   /** Underscore prefix keeps it out of parquet file listings. */
   val SchemaSidecar = "_graft_schema.json"
+
+  /** File-stream admission bound per micro-batch (see `readJsonStream`). */
+  val MaxBytesPerTrigger: Long = 64L << 20
 }

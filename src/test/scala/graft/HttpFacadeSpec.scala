@@ -216,8 +216,8 @@ class HttpFacadeSpec extends SparkSpec {
       assert(arrived.poll(30, java.util.concurrent.TimeUnit.SECONDS) == 1L)
 
       // rollup the ingested measurements (the reference's tick job)
-      val raw = Rollup.rawHistogramTier(spark.read.parquet(measurementsDir))
-      val tiers = Rollup.histogramCascade(raw)
+      val raw = Rollup.rawTier(Rollup.Histogram, spark.read.parquet(measurementsDir))
+      val tiers = RollupSpec.plainCascade(Rollup.Histogram, raw)
         .map { case (w, t) => w -> Rollup.histogramSummaries(t).cache() }
       val provider = new SummaryProvider {
         val catalog = MetricCatalog(Seq(Metric("lat", "timer")))

@@ -147,9 +147,9 @@ class InfluxPlannerSpec extends SparkSpec {
     assert(bound == Seq(Field("count", None, Some("metricA"))))
   }
 
-  // ---- end-to-end over the events-backed store -------------------------
+  // ---- end-to-end over the materialized tiers of the events table -------
 
-  private lazy val store = EventMetricStore.forSession(spark, sf)
+  private lazy val store = MaterializedTiers.provider(spark, sf)
   private lazy val eplanner = new InfluxPlanner(store, () => 1706745600000L)
 
   test("end-to-end: hourly counts match a direct aggregation") {

@@ -82,9 +82,9 @@ class MiscOpsSpec extends SparkSpec {
       .where(col("metric") =!= "view_gauge")
       .orderBy("metric", "bucket_start").collect().toSeq
     val meas = graft.rollup.Rollup.eventsAsMeasurements(Tables.events(spark, sf))
-    val direct = graft.rollup.Rollup.histogramSummaries(
-      graft.rollup.Rollup.histogramCascade(
-        graft.rollup.Rollup.rawHistogramTier(meas))(3600000L))
+    val direct = graft.rollup.Rollup.histogramSummaries(RollupSpec.plainCascade(
+      graft.rollup.Rollup.Histogram, graft.rollup.Rollup.rawTier(
+        graft.rollup.Rollup.Histogram, meas))(3600000L))
       .orderBy("metric", "bucket_start").collect().toSeq
     assert(fromJob == direct)
     // counter tiers conserve total count

@@ -13,7 +13,7 @@ class MonitoringSpec extends SparkSpec {
     val meas = Monitoring.flushAsMeasurements(spark)
     assert(Monitoring.pendingCount == 0)
 
-    val tier = Rollup.rawHistogramTier(meas.where(col("metric") === "~system.rollup.latency"))
+    val tier = Rollup.rawTier(Rollup.Histogram, meas.where(col("metric") === "~system.rollup.latency"))
     val sums = Rollup.histogramSummaries(tier).collect()
     assert(sums.length == 1)
     val r = sums(0)

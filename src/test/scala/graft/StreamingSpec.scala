@@ -1585,6 +1585,125 @@ class StreamingSpec extends SparkSpec {
     assert(tierCount() == 2L)
   }
 
+  test("streaming cascade equals the batch cascade on every tier; 1 h percentiles equal raw") {
+    import graft.rollup.Rollup
+    import org.apache.spark.sql.streaming.Trigger
+    val H = 3600000L
+    val base = Files.createTempDirectory("graft_cascade_eq").toString
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    val si = new StreamingIngest(spark, base)
+    val stream = si.readJsonStream(in)
+    val rnd = new scala.util.Random(42L)
+    val metrics = Seq("lat_a" -> "timer", "lat_b" -> "gauge", "req_a" -> "counter", "req_b" -> "counter")
+    // every posted (metric, ts, value), for the direct check at 1 h
+    val posted = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def batchLine(metric: String, mtype: String, ms: Seq[(Long, Seq[Long])]): String =
+      s"""{"metrics":[{"name":"$metric","mtype":"$mtype","measurements":[""" +
+        ms.map { case (ts, vs) => s"""{"ts":$ts,"values":[${vs.mkString(",")}]}""" }
+          .mkString(",") + "]}]}"
+    for (tick <- 0 until 3) {
+      val from = T0 + tick * H
+      val lines = metrics.map { case (metric, mtype) =>
+        def value(): Long = if (mtype == "counter") 1L + rnd.nextInt(5) else rnd.nextInt(2000).toLong
+        // one measurement per 15 s of event time, written in shuffled
+        // order; from the second tick on, rows up to 25 s behind the
+        // previous tick's newest row — inside the 30 s watermark, into
+        // 5 s buckets that are still open
+        val onTime = (0 until 240).map(k => from + k * 15000L + rnd.nextInt(15000))
+        val behind = if (tick == 0) Nil else (0 until 3).map(_ => from - 1 - rnd.nextInt(25000))
+        val ms = rnd.shuffle(onTime ++ behind).map(ts => ts -> Seq.fill(1 + rnd.nextInt(3))(value()))
+        ms.foreach { case (ts, vs) => vs.foreach(v => posted += ((metric, ts, v))) }
+        batchLine(metric, mtype, ms)
+      }
+      dropFile(in, s"tick$tick.json", lines)
+      val sinks = Seq(si.startRawTier(stream, Trigger.AvailableNow()),
+        si.startCounterTier(stream, Trigger.AvailableNow()))
+      sinks.foreach(_.awaitTermination())
+      si.runCascadeIncrement()
+      si.runCounterCascadeIncrement()
+    }
+
+    // every closed bucket of every tier equals the batch tierUp chain
+    // over the same raw sink (sketches compared byte for byte)
+    def rows(df: org.apache.spark.sql.DataFrame, column: String): Seq[(String, Long, Any)] =
+      df.select("metric", "bucket_start", column).orderBy("metric", "bucket_start").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.get(2) match {
+          case b: Array[Byte] => b.toSeq
+          case x => x
+        })).toSeq
+    def check(kind: Rollup.Kind, storeKind: String, rawPath: String): Unit = {
+      spark.catalog.refreshByPath(rawPath)
+      val batch = RollupSpec.plainCascade(kind, spark.read.parquet(rawPath).drop("bucket_date"))
+      Rollup.StandardTiers.foreach { d =>
+        val cursor = si.readCursor(storeKind, d)
+        spark.catalog.refreshByPath(si.store.path(storeKind, d))
+        val got = rows(si.store.readAll(storeKind, d), kind.column)
+        val want = rows(batch(d).where(col("bucket_start") <= cursor), kind.column)
+        assert(got.nonEmpty, s"$storeKind tier $d closed no bucket")
+        assert(got == want, s"$storeKind tier $d differs from the batch cascade")
+      }
+    }
+    check(Rollup.Histogram, StreamingIngest.HistKind, si.rawTierPath)
+    check(Rollup.Counter, StreamingIngest.CounterKind, si.counterRawTierPath)
+
+    // 1 h summaries equal percentiles taken directly from the posted
+    // values (all < 2048, where the sketch has unit resolution)
+    def rank(sorted: Seq[Long], p: Double): Long =
+      sorted(math.max(1L, (p / 100.0 * sorted.size + 0.5).toLong).toInt - 1)
+    val hours = Rollup.histogramSummaries(si.store.readAll(StreamingIngest.HistKind, H))
+      .select("metric", "bucket_start", "count", "min", "max", "p50", "p90", "p99").collect()
+    assert(hours.map(_.getString(0)).toSet == Set("lat_a", "lat_b") && hours.length == 4,
+      hours.mkString(", "))
+    hours.foreach { r =>
+      val (metric, b) = (r.getString(0), r.getLong(1))
+      val vs = posted.collect { case (m, ts, v) if m == metric && ts >= b && ts < b + H => v }
+        .toSeq.sorted
+      assert(r.getLong(2) == vs.size && r.getLong(3) == vs.head && r.getLong(4) == vs.last)
+      assert(r.getLong(5) == rank(vs, 50) && r.getLong(6) == rank(vs, 90) &&
+        r.getLong(7) == rank(vs, 99), s"$metric@$b")
+    }
+    val hourCounts = si.store.readAll(StreamingIngest.CounterKind, H).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(hourCounts.size == 4)
+    hourCounts.foreach { case ((metric, b), n) =>
+      assert(n == posted.collect { case (m, ts, v) if m == metric && ts >= b && ts < b + H => v }.sum)
+    }
+  }
+
+  test("cursor writes are atomic: a stale temp file from a killed write is ignored") {
+    import graft.rollup.Rollup
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_cursor").toString
+    val si = new StreamingIngest(spark, base)
+    def appendRaw(from: Long): Unit =
+      Rollup.rawTier(Rollup.Counter,
+        (0 until 12).map(i => ("reqs", from + i * 10000L, 1L)).toDF("metric", "ts_ms", "value"))
+        .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
+        .write.mode("append").partitionBy("bucket_date").parquet(si.counterRawTierPath)
+    def tierRows(): Long = {
+      spark.catalog.refreshByPath(si.counterTierPath(30000L))
+      si.store.readAll(StreamingIngest.CounterKind, 30000L).count()
+    }
+    appendRaw(T0) // 2 min of raw buckets: 3 closed 30 s buckets
+    si.runCounterCascadeIncrement(Seq(30000L))
+    val cursor = si.readCursor(StreamingIngest.CounterKind, 30000L)
+    assert(cursor == T0 + 90000L - 1 && tierRows() == 3L)
+    val tmp = Paths.get(s"$base/cursor_${StreamingIngest.CounterKind}_30000.tmp")
+    assert(!Files.exists(tmp), "a completed write leaves no temp file")
+    // a write killed after a partial temp file: a shorter number that
+    // still parses, which would re-roll every bucket were it the cursor
+    Files.write(tmp, cursor.toString.take(4).getBytes)
+    assert(si.readCursor(StreamingIngest.CounterKind, 30000L) == cursor)
+    si.runCounterCascadeIncrement(Seq(30000L))
+    assert(tierRows() == 3L, "a stale temp file re-rolled closed buckets")
+    // the next increment rolls only the new buckets and replaces the temp file
+    appendRaw(T0 + 120000L)
+    si.runCounterCascadeIncrement(Seq(30000L))
+    assert(si.readCursor(StreamingIngest.CounterKind, 30000L) == T0 + 210000L - 1)
+    assert(tierRows() == 7L && !Files.exists(tmp))
+  }
+
   test("streaming sessions: in-stream gap split, watermark timeout, final emission") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

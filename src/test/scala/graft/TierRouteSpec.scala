@@ -28,10 +28,10 @@ class TierRouteSpec extends SparkSpec {
         (s"met_$m", i * 60000L + (m * Hour) % (3 * Hour), (i % 50 + 1).toLong)
       }
     }.toDF("metric", "ts_ms", "value")
-    val raw = Rollup.rawHistogramTier(meas)
+    val raw = Rollup.rawTier(Rollup.Histogram, meas)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     raw.write.partitionBy("bucket_date").parquet(s"$dir/tier_raw")
-    val hour = Rollup.histogramTierUp(spark.read.parquet(s"$dir/tier_raw"), Hour)
+    val hour = Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     hour.write.partitionBy("bucket_date").parquet(s"$dir/tier_$Hour")
     dir
@@ -115,7 +115,7 @@ class TierRouteSpec extends SparkSpec {
     val meas = (0 until 2).flatMap { m =>
       (0 until 240).map(i => (s"ctr_$m", i * 30000L, (i % 7 + 1).toLong))
     }.toDF("metric", "ts_ms", "value")
-    val raw = Rollup.counterTier(meas, 5000L)
+    val raw = Rollup.rawTier(Rollup.Counter, meas)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     raw.write.partitionBy("bucket_date").parquet(s"$base/counter_tier_raw")
     val hour = spark.read.parquet(s"$base/counter_tier_raw")
@@ -176,10 +176,10 @@ class TierRouteSpec extends SparkSpec {
     val meas = (0 until 2).flatMap { m =>
       (0 until 120).map(i => (s"hm_$m", i * 60000L, (i % 31 + 1).toLong))
     }.toDF("metric", "ts_ms", "value")
-    val raw = Rollup.rawHistogramTier(meas)
+    val raw = Rollup.rawTier(Rollup.Histogram, meas)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     raw.write.partitionBy("bucket_date").parquet(s"$dir/hist_5000")
-    val hour = Rollup.histogramTierUp(spark.read.parquet(s"$dir/hist_5000"), Hour)
+    val hour = Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/hist_5000"), Hour)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     hour.write.partitionBy("bucket_date").parquet(s"$dir/hist_$Hour")
     def q(): DataFrame = rebucket(spark.read.parquet(s"$dir/hist_5000"))
@@ -205,11 +205,11 @@ class TierRouteSpec extends SparkSpec {
       .map(i => ("sm_0", dayOfs + i * 60000L, (i % 13 + 1).toLong))
       .toDF("metric", "ts_ms", "value")
     def writeRaw(df: DataFrame): Unit =
-      Rollup.rawHistogramTier(df)
+      Rollup.rawTier(Rollup.Histogram, df)
         .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
         .write.mode("append").partitionBy("bucket_date").parquet(s"$dir/tier_raw")
     def tierUpAll(): DataFrame =
-      Rollup.histogramTierUp(spark.read.parquet(s"$dir/tier_raw"), Hour)
+      Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
         .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     // day 0 rolled up; then day 1 lands in raw with NO cascade run
     writeRaw(measOn(0L))

@@ -15,7 +15,7 @@ class TierStoreSpec extends SparkSpec {
     val store = new TierStore(spark, base)
 
     val meas = Rollup.eventsAsMeasurements(Tables.events(spark, sf))
-    val raw = Rollup.rawHistogramTier(meas)
+    val raw = Rollup.rawTier(Rollup.Histogram, meas)
     store.append("hist", 5000L, raw)
 
     // partition dirs exist per day

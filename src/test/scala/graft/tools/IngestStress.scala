@@ -44,9 +44,6 @@ object IngestStress {
     val nMetrics = args.lift(2).map(_.toInt).getOrElse(50)
     val nVals = args.lift(3).map(_.toInt).getOrElse(100)
     val sinkMode = args.lift(4).getOrElse("parquet") // parquet | count | none
-    // admission knob for the stream leg (r14): bytes (the new default,
-    // 64 MB/trigger) vs files64 (the r13 static maxFilesPerTrigger=64)
-    val admission = args.lift(5).getOrElse("bytes")
 
     val spark = graft.GraftSession.builder(16, 16)
       .appName("graft-ingest-stress").getOrCreate()
@@ -59,12 +56,7 @@ object IngestStress {
 
     // leg 3: live streaming ingest over the same payloads
     val ingest = new graft.streaming.StreamingIngest(spark, s"$base/tiers")
-    val vecs =
-      if (admission == "files64")
-        ingest.readJsonStream(streamIn, maxBytesPerTrigger = None,
-          maxFilesPerTrigger = Some(64))
-      else ingest.readJsonStream(streamIn)
-    val sq = ingest.startRawTier(vecs,
+    val sq = ingest.startRawTier(ingest.readJsonStream(streamIn),
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("5 seconds"))
 
     // leg 2: the facade's async sink — parquet append per parsed batch

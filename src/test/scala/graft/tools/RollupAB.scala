@@ -4,8 +4,11 @@ import graft.rollup.Rollup
 import graft.Tables
 import org.apache.spark.sql.functions._
 
-/** Interleaved A/B of the plain per-step-exchange cascade vs the
-  * aligned one-exchange cascade (same box conditions for both arms). */
+/** Interleaved A/B of the plain per-step-exchange cascade
+  * ([[graft.RollupSpec.plainCascade]]) vs the aligned one-exchange
+  * cascade (same box conditions for both arms).
+  *
+  * Usage: Test/runMain graft.tools.RollupAB [sfDir] [repeat] */
 object RollupAB {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -13,22 +16,19 @@ object RollupAB {
     val spark = graft.GraftSession.builder(32, 32).appName("rollup-ab").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def meas = Rollup.eventsAsMeasurements(Tables.events(spark, dir))
-    def plain1h = {
-      val raw = Rollup.rawHistogramTier(meas)
-      Rollup.histogramSummaries(Rollup.histogramCascade(raw)(3600000L))
+    def plain(kind: Rollup.Kind, m: org.apache.spark.sql.DataFrame, tiers: Seq[Long]) =
+      graft.RollupSpec.plainCascade(kind, Rollup.rawTier(kind, m), tiers)(tiers.last)
+    def plain1h =
+      Rollup.histogramSummaries(plain(Rollup.Histogram, meas, Rollup.StandardTiers))
         .orderBy("metric", "bucket_start")
-    }
     def aligned1h =
-      Rollup.histogramSummaries(Rollup.histogramCascadeAlignedTop(meas))
+      Rollup.histogramSummaries(Rollup.cascadeAlignedTop(Rollup.Histogram, meas))
         .orderBy("metric", "bucket_start")
     def counts = Tables.events(spark, dir).select(
       col("event_type").as("metric"), col("ts_ms"), lit(1L).as("value"))
-    def plainC = {
-      val t5s = Rollup.counterTier(counts, Rollup.RawGroupMs)
-      Rollup.counterTierUp(Rollup.counterTierUp(t5s, 30000L), 60000L)
-        .orderBy("metric", "bucket_start")
-    }
-    def alignedC = Rollup.counterCascadeAlignedTop(counts, Seq(30000L, 60000L))
+    def plainC = plain(Rollup.Counter, counts, Seq(30000L, 60000L))
+      .orderBy("metric", "bucket_start")
+    def alignedC = Rollup.cascadeAlignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
       .orderBy("metric", "bucket_start")
     def time(f: => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime(); graft.Bench.force(f); (System.nanoTime() - t0) / 1e9

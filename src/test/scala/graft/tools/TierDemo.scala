@@ -26,7 +26,7 @@ object TierDemo {
 
     val base = java.nio.file.Files.createTempDirectory("graft_tierdemo").toString
     val store = new TierStore(spark, base)
-    val raw = Rollup.rawHistogramTier(
+    val raw = Rollup.rawTier(Rollup.Histogram,
       Rollup.eventsAsMeasurements(Tables.events(spark, "/root/testdata/sf0.001")))
     store.append("hist", 5000L, raw)
     val parts = new java.io.File(store.path("hist", 5000L)).listFiles()

@@ -1,7 +1,10 @@
 package graft.planner
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.ql.InfluxAst._
 import graft.ql.InfluxParser
 
@@ -23,29 +26,27 @@ trait SummaryProvider {
 }
 
 /** One output series: unique id, display label, source metric name, and
-  * the (time, value) frame. */
-case class SeriesResult(id: String, label: String, metricName: String, df: DataFrame)
+  * its (time, value) points in output order. Values are Doubles, or the
+  * matched metric names for `list series`. */
+case class SeriesResult(id: String, label: String, metricName: String, points: Seq[(Long, Any)])
 
-/** Plans and executes parsed InfluxQL queries against a SummaryProvider,
-  * lowering everything to DataFrame operations (time spine + joins +
-  * column arithmetic) so Catalyst handles pushdown and the physical
-  * plan. Semantics per reference: influx/finder/InfluxQueryResolver.scala.
+/** Plans and executes parsed InfluxQL queries against a SummaryProvider.
+  * Each source is one bounded Spark read (the provider's summaries, with
+  * its time range pushed into partition pruning); the rest of the answer
+  * is computed on the driver, as the reference does (semantics per
+  * influx/finder/InfluxQueryResolver.scala).
   */
 class InfluxPlanner(provider: SummaryProvider,
                     now: () => Long = () => System.currentTimeMillis(),
                     minResolution: Int = 100,   // reference.conf:62
                     maxResolution: Int = 700,   // reference.conf:63
                     // per-source summary read cap (reference.conf:32
-                    // summary-limit). NOTE on fidelity: the reference's
-                    // query path is effectively UNCAPPED — summary-limit
-                    // is only readAll's default count
-                    // (store/SummaryStore.scala:108), and the resolver
-                    // overrides it with the user limit, default
-                    // Int.MaxValue (InfluxQueryResolver.scala:138,
-                    // InfluxAst.scala:30) — so the parity default here is
-                    // Int.MaxValue too. Deployments wanting the
-                    // reference.conf *intent* (bound the damage of a
-                    // buggy/malicious wide-range force query) set 1000.
+                    // summary-limit). The reference's query path is
+                    // uncapped: the resolver overrides summary-limit with
+                    // the user limit, default Int.MaxValue
+                    // (InfluxQueryResolver.scala:138, InfluxAst.scala:30),
+                    // hence this default. Set 1000 for reference.conf's
+                    // intent: bound a wide-range force query's damage.
                     maxSummariesPerSource: Int = Int.MaxValue) {
 
   private val parser = new InfluxParser(now)
@@ -53,24 +54,22 @@ class InfluxPlanner(provider: SummaryProvider,
   /** Entry point: `list series …` or a select query → named series. */
   def execute(spark: SparkSession, queryText: String): Seq[SeriesResult] =
     parser.parseListSeries(queryText) match {
-      case Some(ls) => Seq(listSeries(spark, ls))
+      case Some(ls) => Seq(listSeries(ls))
       case None     => executeSelect(spark, parser.parseQuery(queryText))
     }
 
   /** All series unioned long-form: (series, time, value) — the shape the
     * driver's oracle can reproduce in SQL. */
   def executeLong(spark: SparkSession, queryText: String): DataFrame = {
-    val results = execute(spark, queryText)
-    results.map(r => r.df.select(lit(r.id).as("series"), col("time"), col("value")))
-      .reduce(_ unionAll _)
+    val value = if (parser.parseListSeries(queryText).isDefined) StringType else DoubleType
+    val rows = execute(spark, queryText).flatMap(r => r.points.map { case (t, v) => Row(r.id, t, v) })
+    spark.createDataFrame(rows.asJava, StructType(Seq(StructField("series", StringType),
+      StructField("time", LongType), StructField("value", value))))
   }
 
-  private def listSeries(spark: SparkSession, ls: ListSeries): SeriesResult = {
-    import spark.implicits._
-    val names = provider.catalog.searchByRegex(ls.regex).map(_.name)
+  private def listSeries(ls: ListSeries): SeriesResult =
     SeriesResult("list_series_result", "list_series_result", "",
-      names.toDF("name").select(lit(0L).as("time"), col("name").as("value")))
-  }
+      provider.catalog.searchByRegex(ls.regex).map(m => 0L -> m.name))
 
   // ---- analysis --------------------------------------------------------
 
@@ -178,30 +177,23 @@ class InfluxPlanner(provider: SummaryProvider,
 
   // ---- execution -------------------------------------------------------
 
+  /** Evaluates a select on the driver: one bounded Spark read per
+    * source, then the grid, fill, null drop, binary-op zip, scale and
+    * order in plain Scala over the few hundred summary rows each read
+    * returns (reference: InfluxQueryResolver.scala:135-224). */
   private def executeSelect(spark: SparkSession, q: Query): Seq[SeriesResult] = {
     val (from, to) = buildSlice(q.filters)
     val windowMs = adjustResolution(from, to, q.groupBy)
     val gridFrom = align(from, windowMs, floor = false)
     val gridTo = align(to, windowMs, floor = true)
     val (projections, sourceMap) = bind(q)
-
-    // one bounded summary read per source (reference reads each source
-    // once: InfluxQueryResolver.scala:135-142); limit rides the time
-    // order so it's a top-k pushed below the grid join
-    val reads: Map[String, DataFrame] = sourceMap.map { case (tid, m) =>
-      val base = provider.summaries(m, windowMs, from, to)
-        .where(col("bucket_start").between(from, to))
-      val ordered =
-        if (q.orderAsc) base.orderBy(col("bucket_start").asc)
-        else base.orderBy(col("bucket_start").desc)
-      val cap = math.min(q.limit, maxSummariesPerSource)
-      tid -> (if (cap != Int.MaxValue) ordered.limit(cap) else ordered)
+    def grid: Seq[Long] = gridFrom to gridTo by windowMs
+    def onGrid(t: Long) = t >= gridFrom && t <= gridTo && (t - gridFrom) % windowMs == 0
+    def fields(p: SimpleProjection): Seq[Field] = p match {
+      case f: Field             => Seq(f)
+      case BinaryOp(l, r, _, _) => fields(l) ++ fields(r)
+      case _: Constant          => Nil
     }
-
-    val spine: DataFrame =
-      if (gridFrom > gridTo) spark.range(0).select(col("id").as("time"))
-      else spark.range(gridFrom, gridTo + 1, windowMs).select(col("id").as("time"))
-
     def valueCol(fn: String): Column = fn match {
       // counts-per-minute from the actual window (reference:
       // model/HistogramSummary.scala:92-101)
@@ -209,54 +201,66 @@ class InfluxPlanner(provider: SummaryProvider,
       case other => col(other).cast("double")
     }
 
-    /** (time, value) for one simple projection over the grid. */
-    def series(p: SimpleProjection): DataFrame = p match {
-      case Field(fn, _, Some(tid)) =>
-        val joined = spine.join(
-          reads(tid).withColumnRenamed("bucket_start", "time"), Seq("time"), "left")
-        val withVal = joined.select(col("time"), valueCol(fn).as("value"))
-        q.fill match {
-          case Some(f) => withVal.select(col("time"), coalesce(col("value"), lit(f)).as("value"))
-          case None    => withVal.where(col("value").isNotNull)
+    // one read per referenced source, of only the columns its fields use
+    // (reference reads each source once: InfluxQueryResolver.scala:135-142).
+    // A limit rides the time order as one top-k job; an unlimited read
+    // is collected unsorted, since a global sort would add a sampling job
+    val cap = math.min(q.limit, maxSummariesPerSource)
+    val reads: Map[String, (Seq[String], Array[Row])] =
+      projections.flatMap(fields).groupBy(_.table.get).map { case (tid, fs) =>
+        val fns = fs.map(_.name).distinct
+        val base = provider.summaries(sourceMap(tid), windowMs, from, to)
+          .where(col("bucket_start").between(from, to))
+          .select(col("bucket_start") +: fns.map(fn => valueCol(fn).as(fn)): _*)
+        val time = if (q.orderAsc) col("bucket_start").asc else col("bucket_start").desc
+        tid -> (fns, if (cap == Int.MaxValue) base.collect() else base.orderBy(time).limit(cap).collect())
+      }
+
+    /** (time, value) points of one simple projection over the grid. */
+    def series(p: SimpleProjection): Seq[(Long, Double)] = p match {
+      case Field(fn, _, tid) =>
+        val (fns, rows) = reads(tid.get)
+        val i = fns.indexOf(fn) + 1
+        val pts = rows.toSeq.collect {
+          case r if onGrid(r.getLong(0)) => r.getLong(0) -> Option(r.get(i)).map(_.asInstanceOf[Double])
         }
-      case Constant(v, _) => spine.select(col("time"), lit(v).as("value"))
+        q.fill match {
+          case None => pts.collect { case (t, Some(v)) => t -> v }
+          case Some(f) =>
+            // the grid left-joined with the read, nulls filled
+            val byTime = pts.groupBy(_._1)
+            grid.flatMap(t => byTime.get(t).fold(Seq(t -> f))(_.map(pt => t -> pt._2.getOrElse(f))))
+        }
+      case Constant(v, _) => grid.map(_ -> v)
       case BinaryOp(l, r, op, _) =>
-        val lf = series(l).withColumnRenamed("value", "l")
-        val rf = series(r).withColumnRenamed("value", "r")
         // timestamp-equi inner join (zip) — reference:
         // InfluxQueryResolver.scala:203-208
-        val joined = lf.join(rf, Seq("time"), "inner")
-        val expr = op match {
-          case "+" => col("l") + col("r")
-          case "-" => col("l") - col("r")
-          case "*" => col("l") * col("r")
+        val right = series(r).groupBy(_._1)
+        for ((t, a) <- series(l); (_, b) <- right.getOrElse(t, Nil)) yield t -> (op match {
+          case "+" => a + b
+          case "-" => a - b
+          case "*" => a * b
           case "/" =>
             // divide-by-zero fails the query (reference: InfluxAst.scala:86-95)
-            when(col("r") === 0.0, raise_error(lit("Could not divide by zero")))
-              .otherwise(col("l") / col("r"))
-        }
-        joined.select(col("time"), expr.as("value"))
-      case Field(_, _, None) =>
-        throw new IllegalStateException("unbound field after analysis")
+            if (b == 0.0) throw new ArithmeticException("Could not divide by zero") else a / b
+        })
     }
 
+    // scale + round to 4 dp HALF_UP always applies, as Spark's round(x, 4)
+    // does it: NaN and ±Inf pass through (reference:
+    // InfluxQueryResolver.scala:214-224)
+    def round4(d: Double): Double = if (d.isNaN || d.isInfinite) d
+      else java.math.BigDecimal.valueOf(d).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
     // deterministic series order (reference: InfluxQueryResolver.scala:155)
     projections.sortBy(_.seriesId).map { p =>
-      val raw = series(p)
-      // scale + round to 4 dp HALF_UP always applies (reference:
-      // InfluxQueryResolver.scala:214-224)
-      val scaled = raw.select(col("time"),
-        round(col("value") * lit(q.scale.getOrElse(1.0)), 4).as("value"))
-      val ordered =
-        if (q.orderAsc) scaled.orderBy(col("time").asc)
-        else scaled.orderBy(col("time").desc)
+      val scaled = series(p).map { case (t, v) => t -> round4(v * q.scale.getOrElse(1.0)) }
       val (label, metricName) = p match {
-        case Field(fn, alias, Some(tid)) => (alias.getOrElse(fn), tid)
-        case c: Constant                 => (c.alias.getOrElse(""), "")
-        case o: BinaryOp                 => (o.alias, "")
-        case _                           => ("", "")
+        case Field(fn, alias, tid) => (alias.getOrElse(fn), tid.get)
+        case c: Constant           => (c.alias.getOrElse(""), "")
+        case o: BinaryOp           => (o.alias, "")
       }
-      SeriesResult(p.seriesId, label, metricName, ordered)
+      SeriesResult(p.seriesId, label, metricName,
+        if (q.orderAsc) scaled.sortBy(_._1) else scaled.sortBy(_._1)(Ordering[Long].reverse))
     }
   }
 }

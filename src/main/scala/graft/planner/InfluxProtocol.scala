@@ -11,17 +11,12 @@ object InfluxProtocol {
 
   case class InfluxSeries(name: String, columns: Vector[String], points: Vector[Vector[Any]])
 
-  /** Materialize planner results into envelope series. Each series frame
-    * is (time, value) already scaled/rounded/ordered by the planner;
-    * collect here is the driver-side marshalling step the reference also
-    * performs (query outputs are 100-700 points by design). */
+  /** Envelope series of planner results, whose points are already
+    * scaled, rounded and ordered on the driver (query outputs are
+    * 100-700 points by design). */
   def toInfluxSeries(results: Seq[SeriesResult]): Seq[InfluxSeries] =
-    results.map { r =>
-      val points = r.df.collect().map { row =>
-        Vector[Any](row.getLong(0), row.get(1))
-      }.toVector
-      InfluxSeries(r.metricName, Vector("time", r.label), points)
-    }
+    results.map(r => InfluxSeries(r.metricName, Vector("time", r.label),
+      r.points.map { case (t, v) => Vector[Any](t, v) }.toVector))
 
   /** JSON text of the envelope (hand-rolled: values are Long/Double/
     * String only — the engine's whole scalar surface). */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-facing queries that exercise the full InfluxQL path:
-  * parse → analyze/bind → tier routing → DataFrame lowering, against
+  * parse → analyze/bind → tier routing → one read per source and the
+  * driver-side evaluation of the rest, against
   * metrics derived from `events` (timer per event_type, counter per
   * `<event_type>_count`).
   *
@@ -83,7 +84,7 @@ object InfluxQueries {
 
   def listSeries(spark: SparkSession, dir: String): DataFrame = {
     val planner = new InfluxPlanner(MaterializedTiers.provider(spark, dir))
-    planner.execute(spark, "list series /count/").head.df
+    planner.executeLong(spark, "list series /count/")
       .select(col("time"), col("value").as("name")).orderBy("name")
   }
 

@@ -34,12 +34,14 @@ import graft.planner.{DashboardStore, InfluxPlanner, InfluxProtocol}
   *
   *  - `POST /khronus/metrics`                → gzip-or-plain JSON
   *    MetricBatch; parsed and handed to the ingest sink asynchronously,
-  *    200 returned immediately — at-most-once, errors logged, matching
-  *    the reference's fire-and-forget ingest
-  *    (reference: service/KhronusEnpoint.scala:34-46)
+  *    200 returned immediately — at-most-once, matching the reference's
+  *    fire-and-forget ingest (reference: service/KhronusEnpoint.scala:34-46);
+  *    a failed batch is logged on stderr and counted as the
+  *    `~system.ingest.failures` counter
   *
-  * The facade is driver-side plumbing: every byte of real work happens
-  * in the planner/ingest DataFrames it delegates to.
+  * The facade is driver-side plumbing: queries are answered by the
+  * planner (one Spark read per source, the rest on the driver) and
+  * ingest work happens in the sink it delegates to.
   */
 class HttpFacade(spark: SparkSession,
                  planner: InfluxPlanner,
@@ -103,7 +105,11 @@ class HttpFacade(spark: SparkSession,
           try {
             import spark.implicits._
             ingestSink(MetricBatchIngest.parse(Seq(body).toDF("value")))
-          } catch { case e: Exception => System.err.println(s"[graft] ingest failed: $e") }
+          } catch {
+            case e: Exception =>
+              System.err.println(s"[graft] ingest failed: $e")
+              graft.Monitoring.incrementCounter("ingest.failures")
+          }
       })
       ()
     })

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Persistent tier storage: one parquet table per (kind, resolution),
   * date-partitioned on the bucket's UTC day (reference keeps one
@@ -40,10 +44,12 @@ class TierStore(spark: SparkSession, baseDir: String) {
     * break partition discovery for every subsequent reader. */
   def append(kind: String, durationMs: Long, tier: DataFrame): Unit = {
     migrateFlatLayout(kind, durationMs)
-    withDate(tier).repartition(col("bucket_date")).write
+    val dated = withDate(tier)
+    dated.repartition(col("bucket_date")).write
       .mode(SaveMode.Append)
       .partitionBy("bucket_date")
       .parquet(path(kind, durationMs))
+    TierStore.writeSchema(path(kind, durationMs), dated.schema)
   }
 
   /** One-time upgrade of a legacy flat tier table (no bucket_date
@@ -84,16 +90,31 @@ class TierStore(spark: SparkSession, baseDir: String) {
     * scan). */
   def slice(kind: String, durationMs: Long, fromMs: Long, toMs: Long,
             metric: Option[String] = None): DataFrame = {
-    val df = spark.read.parquet(path(kind, durationMs))
-      .where(col("bucket_date").between(
-        lit(TierStore.utcDateOf(fromMs)), lit(TierStore.utcDateOf(toMs))))
-      .where(col("bucket_start").between(fromMs, toMs))
-    metric.fold(df)(m => df.where(col("metric") === m)).drop("bucket_date")
+    val range = col("bucket_date").between(
+        lit(TierStore.utcDateOf(fromMs)), lit(TierStore.utcDateOf(toMs))) &&
+      col("bucket_start").between(fromMs, toMs)
+    relation(path(kind, durationMs))
+      .where(metric.fold(range)(m => range && col("metric") === m)).drop("bucket_date")
   }
 
   /** Full-table read (cascade builds; queries should use [[slice]]). */
   def readAll(kind: String, durationMs: Long): DataFrame =
-    spark.read.parquet(path(kind, durationMs)).drop("bucket_date")
+    relation(path(kind, durationMs)).drop("bucket_date")
+
+  /** The base relation of each table read, kept with the table's
+    * [[TierStore.fingerprint]] at the time it was built. Building one
+    * (data source lookup, file listing, Hadoop configuration copy) costs
+    * several times what a point read then does, so it is reused while
+    * the fingerprint holds: any append, compaction, retention drop,
+    * migration or swap, by this store or another writer, changes it. */
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[String, (TierStore.Fingerprint, DataFrame)]()
+
+  private def relation(p: String): DataFrame = {
+    val seen = TierStore.fingerprint(p)
+    relations.compute(p, (_, cached) =>
+      if (cached != null && cached._1 == seen) cached else (seen, TierStore.read(spark, p)))._2
+  }
 
   /** Retention: drop partitions older than ttl (reference applies TTL
     * per tier — buckets 6h, summaries 15d/30d/90d). Returns dropped
@@ -152,6 +173,52 @@ class TierStore(spark: SparkSession, baseDir: String) {
 }
 
 object TierStore {
+
+  /** Schema sidecar file name; the underscore prefix keeps it out of
+    * parquet file listings. */
+  val SchemaSidecar = "_graft_schema.json"
+
+  /** Record a table's schema (partition column included) next to its
+    * files. Reads that supply it skip parquet schema inference, which
+    * otherwise runs a Spark job over the file footers on every read, and
+    * on a streaming sink may open a file that retention has deleted but
+    * the sink's `_spark_metadata` log still names. Atomic replace: the
+    * JSON lands in a temp file of the same directory and is renamed over
+    * the sidecar, so a write killed midway never leaves truncated JSON
+    * for readers to fail on. Rewritten only when the schema changes. */
+  def writeSchema(dir: String, schema: StructType): Unit = {
+    val nullable = StructType(schema.map(_.copy(nullable = true)))
+    if (!readSchema(dir).contains(nullable)) {
+      val p = Paths.get(dir, SchemaSidecar)
+      Files.createDirectories(p.getParent)
+      val tmp = p.resolveSibling(SchemaSidecar + ".tmp")
+      Files.write(tmp, nullable.json.getBytes(UTF_8))
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** The sidecar schema of a table, if one has been written. */
+  def readSchema(dir: String): Option[StructType] = {
+    val p = Paths.get(dir, SchemaSidecar)
+    if (!Files.exists(p)) None
+    else Some(DataType.fromJson(new String(Files.readAllBytes(p), UTF_8)).asInstanceOf[StructType])
+  }
+
+  private type Fingerprint = (Long, Seq[(String, Long, Seq[String])])
+
+  /** The table dir's mtime and, per top-level entry (partition dirs,
+    * sidecar), its name, mtime and child names: the file set a reader
+    * of the table lists. */
+  private def fingerprint(dir: String): Fingerprint = {
+    val root = new java.io.File(dir)
+    (root.lastModified, Option(root.listFiles).toSeq.flatten.sortBy(_.getName)
+      .map(f => (f.getName, f.lastModified, Option(f.list).toSeq.flatten.sorted)))
+  }
+
+  /** Read a parquet table with its sidecar schema; a table written
+    * before sidecars existed falls back to schema inference. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readSchema(dir).fold(spark.read)(spark.read.schema).parquet(dir)
 
   /** Delete a file tree; no-op when absent. */
   def deleteTree(f: java.io.File): Unit = {

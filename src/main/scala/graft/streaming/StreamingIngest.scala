@@ -46,7 +46,7 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
 
   def rawTierPath = s"$baseDir/tier_raw"
   def tierPath(d: Long) = store.path(StreamingIngest.HistKind, d)
-  import StreamingIngest.{CounterKind, HistKind, MaxBytesPerTrigger, SchemaSidecar}
+  import StreamingIngest.{CounterKind, HistKind, MaxBytesPerTrigger}
   private def cursorPath(kind: String, d: Long) = s"$baseDir/cursor_${kind}_$d"
 
   /** JSON-lines file stream → parsed measurements stream.
@@ -108,7 +108,10 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
     requirePartitionedLayout(path)
     val partitioned = agg
       .withColumn("bucket_date", TierStore.utcDate(col("bucket_start")))
-    writeSchemaSidecar(path, partitioned.schema)
+    // a sink's `_spark_metadata` log keeps naming partitions that
+    // enforceRawRetention dropped; the sidecar lets every read skip the
+    // schema inference that could open one of them
+    TierStore.writeSchema(path, partitioned.schema)
     partitioned
       .writeStream
       .outputMode("append")
@@ -189,37 +192,12 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
   /** Lower-bounded slice, `bucket_date` retained for further pruning.
     * The first pass has cursor = Long.MinValue — no finite lower date. */
   private def readSliceFrom(path: String, fromExclusive: Long): DataFrame = {
-    val all = readWithSidecarSchema(path)
+    val all = TierStore.read(spark, path)
     val pruned =
       if (fromExclusive >= 0L)
         all.where(col("bucket_date") >= lit(TierStore.utcDateOf(fromExclusive)))
       else all
     pruned.where(col("bucket_start") > fromExclusive)
-  }
-
-  /** A streaming sink's file listing comes from its `_spark_metadata`
-    * log, which keeps naming partitions that [[enforceRawRetention]]
-    * has dropped. Date pruning excludes those paths from the scan, but
-    * parquet SCHEMA INFERENCE runs before any filter and may open a
-    * deleted file — so every sink records its schema in a sidecar at
-    * start, and reads supply it explicitly, skipping inference. */
-  private def writeSchemaSidecar(path: String,
-                                 schema: org.apache.spark.sql.types.StructType): Unit = {
-    val f = new java.io.File(path, SchemaSidecar)
-    if (!f.exists()) {
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, schema.json.getBytes)
-    }
-  }
-
-  private def readWithSidecarSchema(path: String): DataFrame = {
-    val f = new java.io.File(path, SchemaSidecar)
-    if (f.exists()) {
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(new String(java.nio.file.Files.readAllBytes(f.toPath)))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      spark.read.schema(schema).parquet(path)
-    } else spark.read.parquet(path)
   }
 
   def tier(d: Long): DataFrame = store.readAll(HistKind, d)
@@ -297,9 +275,6 @@ object StreamingIngest {
     * the legacy un-namespaced files — see `readCursor`). */
   val HistKind = "tier"
   val CounterKind = "counter_tier"
-
-  /** Underscore prefix keeps it out of parquet file listings. */
-  val SchemaSidecar = "_graft_schema.json"
 
   /** File-stream admission bound per micro-batch (see `readJsonStream`). */
   val MaxBytesPerTrigger: Long = 64L << 20

@@ -165,6 +165,36 @@ class HttpFacadeSpec extends SparkSpec {
     } finally facade.stop()
   }
 
+  test("a failed POST ingest is counted as ~system.ingest.failures; a division by zero is a 400") {
+    val dashDir = java.nio.file.Files.createTempDirectory("graft_dash_fail").toString
+    val reached = new java.util.concurrent.CountDownLatch(1)
+    val facade = new HttpFacade(spark,
+      new InfluxPlanner(MaterializedTiers.provider(spark, sf)),
+      new DashboardStore(dashDir),
+      _ => { reached.countDown(); throw new IllegalStateException("sink down") })
+    val port = facade.start()
+    try {
+      val base = s"http://localhost:$port"
+      val batch = """{"metrics":[{"name":"m1","mtype":"timer","measurements":[{"ts":1704067200000,"values":[5]}]}]}"""
+      assert(post(s"$base/khronus/metrics", batch) == 200)
+      assert(reached.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      // the counter lands right after the sink throws; other suites'
+      // samples may share the queue, so collect until it shows up
+      val failures = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      val deadline = System.currentTimeMillis() + 30000
+      while (failures.isEmpty && System.currentTimeMillis() < deadline) {
+        failures ++= Monitoring.flushAsMeasurements(spark).collect()
+          .filter(_.getString(0) == "~system.ingest.failures")
+        if (failures.isEmpty) Thread.sleep(50)
+      }
+      assert(failures.map(_.getLong(2)).toSeq == Seq(1L))
+
+      val q = """select e.count / 0 as boom from "error" as e where time between 1704067200000 and 1704153599999 force group by time(1h)"""
+      val (code, body) = get(s"$base/khronus/db/influx/series?q=${enc(q)}")
+      assert(code == 400 && body.contains("Could not divide by zero"), body)
+    } finally facade.stop()
+  }
+
   test("storePosted: depth scan survives nested braces and escaped quotes; head wins") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dash_post").toString
     val store = new DashboardStore(dir)

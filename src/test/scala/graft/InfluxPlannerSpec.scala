@@ -156,7 +156,7 @@ class InfluxPlannerSpec extends SparkSpec {
     val res = eplanner.execute(spark,
       """select count from "purchase" where time between 1704067200000 and 1704153599999 force group by time(1h)""")
     assert(res.size == 1)
-    val got = res.head.df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = res.head.points.map { case (t, v) => t -> v.asInstanceOf[Double] }.toMap
     import org.apache.spark.sql.functions._
     val expect = Tables.events(spark, sf)
       .where(col("event_type") === "purchase" && floor(col("value")) >= 0 &&
@@ -167,9 +167,11 @@ class InfluxPlannerSpec extends SparkSpec {
   }
 
   test("end-to-end: division by zero fails the query") {
-    val res = eplanner.execute(spark,
-      """select e.count / 0 as boom from "error" as e where time between 1704067200000 and 1704153599999 force group by time(1h)""")
-    intercept[Exception] { res.head.df.collect() }
+    val e = intercept[Exception] {
+      eplanner.execute(spark,
+        """select e.count / 0 as boom from "error" as e where time between 1704067200000 and 1704153599999 force group by time(1h)""")
+    }
+    assert(e.getMessage.contains("Could not divide by zero"))
   }
 
   test("influx series JSON envelope: (name, columns, points), time first") {
@@ -196,20 +198,21 @@ class InfluxPlannerSpec extends SparkSpec {
     }
     val q = """select count from "jobs" where time between 0 and 89999999 force group by time(30s)"""
     val capped = new InfluxPlanner(provider, () => NOW, maxSummariesPerSource = 500)
-    val res = capped.execute(spark, q)
-    assert(res.head.df.count() == 500)
-    assert(res.head.df.queryExecution.executedPlan.toString.contains("500"),
-      "plan must carry the read cap")
+    var res: Seq[SeriesResult] = Nil
+    val plans = executedPlans { res = capped.execute(spark, q) }
+    assert(res.head.points.size == 500)
+    assert(plans.size == 1 && plans.head.contains("TakeOrderedAndProject(limit=500"),
+      s"the source read must carry the read cap:\n${plans.mkString("\n")}")
     // the parity default is uncapped, like the reference's query path
     // (readAll count is overridden by the criteria limit =
     // Int.MaxValue — InfluxQueryResolver.scala:138, InfluxAst.scala:30)
     val uncapped = new InfluxPlanner(provider, () => NOW)
-    assert(uncapped.execute(spark, q).head.df.count() == 3000)
+    assert(uncapped.execute(spark, q).head.points.size == 3000)
   }
 
   test("list series returns catalog matches") {
     val res = eplanner.execute(spark, "list series /count/")
-    val names = res.head.df.collect().map(_.getString(1)).toSeq
+    val names = res.head.points.map(_._2.asInstanceOf[String])
     assert(names.nonEmpty && names.forall(_.endsWith("_count")))
   }
 }

@@ -201,7 +201,6 @@ class PlanAuditSpec extends SparkSpec {
     "e_ann_recall" -> "brute-force reference arm in numerator+denominator; rescued (ReusedExchange)",
     "e_pq_near_dup" -> "self-join legs over the code-assignment frame; rescued (ReusedExchange)",
     "e_rank_metrics" -> "label join under two metric arms; rescued (ReusedExchange)",
-    "influx_math_ops" -> "binary-op zip joins share the summary slice; rescued (ReusedExchange)",
     "e_ivf_near_dup" -> ("self-join legs recompute the probe projection (narrow, stateless " +
       "explode over the pruned scan) when AQE broadcasts one leg — cheaper at scale than " +
       "materializing the exploded n×nprobe frame; under SMJ the identical exchanges reuse"))

@@ -1448,9 +1448,12 @@ class StreamingSpec extends SparkSpec {
     val provider = new graft.streaming.StreamingTierProvider(spark, si,
       Seq(graft.planner.Metric("lat", "timer")))
     val planner = new graft.planner.InfluxPlanner(provider)
-    val res = planner.execute(spark,
-      s"""select count, max from "lat" where time between $T0 and ${T0 + 200000} force group by time(30s)""")
-    val series = res.map(r => r.id -> r.df.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap).toMap
+    var res: Seq[graft.planner.SeriesResult] = Nil
+    val plans = executedPlans {
+      res = planner.execute(spark,
+        s"""select count, max from "lat" where time between $T0 and ${T0 + 200000} force group by time(30s)""")
+    }
+    val series = res.map(r => r.id -> r.points.map { case (t, v) => t -> v.asInstanceOf[Double] }.toMap).toMap
     val direct = raw.where(col("bucket_start") < T0 + 90000) // closed 30s buckets only
       .groupBy(graft.rollup.Rollup.bucketOf(col("bucket_start"), 30000L).as("b"))
       .agg(graft.functions.hdr_summary(hdr_merge(col("sketch"))).as("s"))
@@ -1463,11 +1466,13 @@ class StreamingSpec extends SparkSpec {
     }
 
     // the streaming-built tier is date-partitioned and the influx read
-    // prunes it: PartitionFilters on bucket_date in the physical plan
+    // prunes it: PartitionFilters on bucket_date in the physical plan of
+    // the query's one source read
     val tierDirs = new java.io.File(si.tierPath(30000L)).listFiles()
       .filter(_.getName.startsWith("bucket_date=")).map(_.getName)
     assert(tierDirs.nonEmpty, "streaming tier must be bucket_date-partitioned")
-    val plan = res.head.df.queryExecution.executedPlan.toString
+    assert(plans.size == 1, s"one source read expected:\n${plans.mkString("\n")}")
+    val plan = plans.head
     assert(plan.contains("PartitionFilters") && plan.contains("bucket_date"),
       s"streaming-served influx plan must prune partitions:\n$plan")
 
@@ -1542,7 +1547,7 @@ class StreamingSpec extends SparkSpec {
     val planner = new graft.planner.InfluxPlanner(provider)
     def points(): Map[Long, Double] = planner.execute(spark,
       s"""select count from "reqs" where time between $T0 and ${T0 + 3 * DAY} force group by time(30s)""")
-      .head.df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .head.points.map { case (t, v) => t -> v.asInstanceOf[Double] }.toMap
     val full = points()
     for (d <- 0 to 2) {
       assert(full(T0 + d * DAY) == 3.0)

@@ -92,6 +92,81 @@ class TierStoreSpec extends SparkSpec {
     assert(store.slice("hist", 5000L, 1704067200000L, 1704067200000L).count() == 1)
   }
 
+  test("schema sidecar: written by append, atomically and once per schema; reads skip inference") {
+    import java.nio.file.attribute.BasicFileAttributes
+    val base = Files.createTempDirectory("graft_tiers_sidecar").toString
+    val store = new TierStore(spark, base)
+    def rows(n: Int) = spark.range(n).selectExpr("'m' AS metric",
+      "1704067200000 + id * 30000 AS bucket_start", "id AS count")
+    store.append("c", 30000L, rows(3))
+    val sidecar = java.nio.file.Paths.get(store.path("c", 30000L), TierStore.SchemaSidecar)
+    def stamp() = {
+      val a = Files.readAttributes(sidecar, classOf[BasicFileAttributes])
+      (a.fileKey(), a.lastModifiedTime(), new String(Files.readAllBytes(sidecar)))
+    }
+    val first = stamp()
+    assert(TierStore.readSchema(store.path("c", 30000L)).map(_.fieldNames.toSeq)
+      .contains(Seq("metric", "bucket_start", "count", "bucket_date")))
+
+    // a second append with the same schema leaves the file alone
+    store.append("c", 30000L, rows(2))
+    assert(stamp() == first, "same-schema append rewrote the sidecar")
+
+    // a killed sidecar write leaves only a truncated temp file: readers
+    // see the same schema and rows as before
+    val before = store.readAll("c", 30000L).orderBy("bucket_start").collect().toSeq
+    Files.write(sidecar.resolveSibling(TierStore.SchemaSidecar + ".tmp"), "{\"type\":\"str".getBytes)
+    spark.catalog.refreshByPath(store.path("c", 30000L))
+    val after = store.readAll("c", 30000L)
+    val written = TierStore.readSchema(store.path("c", 30000L)).get
+    assert(after.schema.fields.toSeq == written.fields.toSeq.dropRight(1)) // less bucket_date
+    assert(after.orderBy("bucket_start").collect().toSeq == before && before.size == 5)
+
+    // with the sidecar, planning a slice runs no Spark job (no footer
+    // inference); a table without one still reads, by inference
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val slice = store.slice("c", 30000L, 1704067200000L, 1704067260000L)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(jobs.get() == 0, "slice planning ran a Spark job")
+      assert(slice.count() == 5)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    Files.delete(sidecar)
+    spark.catalog.refreshByPath(store.path("c", 30000L))
+    assert(store.readAll("c", 30000L).count() == 5)
+  }
+
+  test("a store reuses a table's relation until its files change, by any writer") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val base = Files.createTempDirectory("graft_tiers_reuse").toString
+    val (a, b) = (new TierStore(spark, base), new TierStore(spark, base))
+    def rows(day: Int) = spark.range(2).selectExpr("'m' AS metric",
+      s"1704067200000 + $day * 86400000 + id * 30000 AS bucket_start", "id AS count")
+    def relation(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.get
+    a.append("c", 30000L, rows(0))
+    val first = a.readAll("c", 30000L)
+    assert(relation(a.slice("c", 30000L, 0L, 1704067200000L + DAY)) eq relation(first))
+    // another store's append, into an existing and into a new partition
+    b.append("c", 30000L, rows(0))
+    assert(a.readAll("c", 30000L).count() == 4)
+    b.append("c", 30000L, rows(1))
+    assert(a.readAll("c", 30000L).count() == 6)
+    assert(!(relation(a.readAll("c", 30000L)) eq relation(first)))
+    // another store's retention drop and compaction
+    b.enforceRetention("c", 30000L, ttlMs = DAY, nowMs = 1704067200000L + 2 * DAY)
+    assert(a.readAll("c", 30000L).count() == 2)
+    b.append("c", 30000L, rows(1))
+    b.compact("c", 30000L, maxFiles = 1)
+    assert(a.readAll("c", 30000L).orderBy("bucket_start").collect().map(_.getLong(2)).toSeq ==
+      Seq(0L, 0L, 1L, 1L))
+  }
+
   test("streaming sink refuses a legacy flat raw tier dir") {
     val base = Files.createTempDirectory("graft_stream_flat").toString
     val ing = new graft.streaming.StreamingIngest(spark, base)

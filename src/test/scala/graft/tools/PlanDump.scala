@@ -22,10 +22,18 @@ object PlanDump {
     val names: Seq[String] =
       if (args(0) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    // tiers/buckets/indexes exist on a deployment before any query runs
-    try graft.planner.MaterializedTiers.ensure(spark, sf) catch { case _: Throwable => () }
-    try graft.ops.Bucketing.ensureOrderTables(spark, sf) catch { case _: Throwable => () }
-    try { graft.queries.PqServeStores.ensure(spark, sf); () } catch { case _: Throwable => () }
+    // tiers/buckets/indexes exist on a deployment before any query runs;
+    // a failed step stops the dump rather than run inside the first query
+    def setup(step: String)(body: => Unit): Unit =
+      try body
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[plandump] setup $step failed: $e")
+          throw e
+      }
+    setup("tiers") { graft.planner.MaterializedTiers.ensure(spark, sf); () }
+    setup("bucketing") { graft.ops.Bucketing.ensureOrderTables(spark, sf); () }
+    setup("pq_index") { graft.queries.PqServeStores.ensure(spark, sf); () }
     val dir = new java.io.File(s"plans/$tag")
     dir.mkdirs()
     names.foreach { n =>

@@ -33,8 +33,8 @@ import graft.sketch.HdrSketchAgg
   * — gets the plan a tier-aware engine would pick: a partition-pruned
   * scan of `tier_3600000` (one row per metric-hour) instead of merging
   * 720× the rows. Sketch merge is associative and the cascade
-  * materializes exactly this aggregate ([[graft.rollup.Rollup
-  * .tierUp]]), so the rewrite is result-identical whenever
+  * ([[graft.rollup.Rollup.cascade]]) materializes exactly this
+  * aggregate, so the rewrite is result-identical whenever
   * the target tier is CURRENT for the source's closed buckets.
   *
   * OPT-IN: set `spark.graft.tiers.autoRoute` to the [[graft.sources

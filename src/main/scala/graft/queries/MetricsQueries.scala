@@ -19,6 +19,11 @@ object MetricsQueries {
   private def measurements(spark: SparkSession, dir: String): DataFrame =
     Rollup.eventsAsMeasurements(Tables.events(spark, dir))
 
+  /** The coarsest of `tiers` over every bucket of `meas`. */
+  private def top(kind: Rollup.Kind, meas: DataFrame,
+                  tiers: Seq[Long] = Rollup.StandardTiers): DataFrame =
+    Rollup.cascade(kind, meas, tiers.map(Rollup.Span(_))).top
+
   /** Counter path through two cascade steps: per-metric event counts at
     * 1 m resolution, built 5 s → 30 s → 1 m. */
   def counterRollup1m(spark: SparkSession, dir: String): DataFrame = {
@@ -26,16 +31,14 @@ object MetricsQueries {
       col("event_type").as("metric"), col("ts_ms"), lit(1L).as("value"))
     // same 5 s → 30 s → 1 m chain, aligned on one (metric, 1 m-bucket)
     // exchange (r15 optimization: was one Exchange per step)
-    Rollup.cascadeAlignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
-      .orderBy("metric", "bucket_start")
+    top(Rollup.Counter, counts, Seq(30000L, 60000L)).orderBy("metric", "bucket_start")
   }
 
   /** Histogram summary at 5 m via the full cascade (4 merge stages). */
   def hdrSummary5m(spark: SparkSession, dir: String): DataFrame = {
     // same 5 s → 30 s → 1 m → 5 m merge chain, aligned on one
     // (metric, 5 m-bucket) exchange (r15: was one Exchange per step)
-    val t5m = Rollup.cascadeAlignedTop(Rollup.Histogram,
-      measurements(spark, dir), Seq(30000L, 60000L, 300000L))
+    val t5m = top(Rollup.Histogram, measurements(spark, dir), Seq(30000L, 60000L, 300000L))
     Rollup.histogramSummaries(t5m).orderBy("metric", "bucket_start")
   }
 
@@ -44,8 +47,8 @@ object MetricsQueries {
   def hdrSummary1h(spark: SparkSession, dir: String): DataFrame = {
     // full standard cascade, aligned on one (metric, 1 h-bucket)
     // exchange (r15: was one Exchange per step — 8 total)
-    val top = Rollup.cascadeAlignedTop(Rollup.Histogram, measurements(spark, dir))
-    Rollup.histogramSummaries(top).orderBy("metric", "bucket_start")
+    Rollup.histogramSummaries(top(Rollup.Histogram, measurements(spark, dir)))
+      .orderBy("metric", "bucket_start")
   }
 
   /** DuckDB oracle for a histogram-summary tier: percentiles via the
@@ -90,8 +93,7 @@ object MetricsQueries {
     val meas = Tables.events(spark, dir).select(
       col("event_type").as("metric"), col("ts_ms"),
       floor(col("value") * 100).cast("long").as("value"))
-    val top = Rollup.cascadeAlignedTop(Rollup.Histogram, meas)
-    Rollup.histogramSummaries(top)
+    Rollup.histogramSummaries(top(Rollup.Histogram, meas))
       .select("metric", "bucket_start", "count", "min", "max", "p50", "p99")
       .orderBy("metric", "bucket_start")
   }

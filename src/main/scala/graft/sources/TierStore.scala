@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -30,26 +31,52 @@ class TierStore(spark: SparkSession, baseDir: String) {
     df.withColumn("bucket_date", TierStore.utcDate(col("bucket_start")))
 
   /** Append tier rows (metric, bucket_start, payload…) date-partitioned.
-    * Rows are shuffled onto their date before the write so each date
-    * directory gets one file per shuffle partition that actually holds
-    * that date (for tier tables — post-aggregation rows of a few hundred
-    * bytes — that is one file), instead of every write task spraying a
-    * sliver into every date. Small-file counts are what kill both this
-    * write and every later read's file listing; at larger volumes the
-    * shuffle partition count bounds per-task file size as usual.
+    * Rows are shuffled onto their date before the write, into one
+    * partition per core, so each date directory gets exactly one file
+    * (for tier tables — post-aggregation rows of a few hundred bytes —
+    * one file is enough), instead of every write task spraying a sliver
+    * into every date. The explicit partition count keeps adaptive
+    * execution from coalescing the shuffle into one task, so a many-day
+    * append (a RollupJob tier: one file per day) writes on every core.
+    * Small-file counts are what kill both this write and every later
+    * read's file listing.
     *
     * A table written by a pre-partitioning version of this store (flat
     * parquet files at the directory top level) is migrated in place on
     * first append: appending partitioned files next to flat ones would
-    * break partition discovery for every subsequent reader. */
+    * break partition discovery for every subsequent reader.
+    *
+    * A table keeps one schema: a column the table already holds is
+    * up-cast to the stored type, and an append that would need a lossy
+    * cast is refused, since readers read every file with the one sidecar
+    * schema. */
   def append(kind: String, durationMs: Long, tier: DataFrame): Unit = {
     migrateFlatLayout(kind, durationMs)
-    val dated = withDate(tier)
-    dated.repartition(col("bucket_date")).write
+    val p = path(kind, durationMs)
+    val dated = conform(p, withDate(tier))
+    dated.repartition(spark.sparkContext.defaultParallelism, col("bucket_date")).write
       .mode(SaveMode.Append)
       .partitionBy("bucket_date")
-      .parquet(path(kind, durationMs))
-    TierStore.writeSchema(path(kind, durationMs), dated.schema)
+      .parquet(p)
+    TierStore.writeSchema(p, dated.schema)
+  }
+
+  /** `rows` with every column the table at `p` already holds cast to its
+    * stored type: the sidecar's, or for a table written before sidecars
+    * existed, the inferred one. */
+  private def conform(p: String, rows: DataFrame): DataFrame = {
+    val hasFiles = Option(new java.io.File(p).list).exists(_.exists(_.startsWith("bucket_date=")))
+    val stored = TierStore.readSchema(p)
+      .orElse(if (hasFiles) Some(spark.read.parquet(p).schema) else None)
+      .fold(Map.empty[String, DataType])(_.map(f => f.name -> f.dataType).toMap)
+    rows.select(rows.schema.map { f =>
+      stored.get(f.name).filter(_ != f.dataType) match {
+        case Some(to) if Cast.canUpCast(f.dataType, to) => col(f.name).cast(to).as(f.name)
+        case Some(to) => throw new IllegalArgumentException(
+          s"$p stores column ${f.name} as ${to.sql}; refusing to append it as ${f.dataType.sql}")
+        case None => col(f.name)
+      }
+    }: _*)
   }
 
   /** One-time upgrade of a legacy flat tier table (no bucket_date

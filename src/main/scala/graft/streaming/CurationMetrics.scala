@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.io.File
 
-import graft.rollup.Rollup
+import graft.rollup.{Rollup, RollupJob}
 import graft.sources.TierStore
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -108,15 +108,10 @@ object CurationMetrics {
       .filter(_.getName.startsWith(new File(storeDir).getName + ".tmp"))
       .foreach(TierStore.deleteTree)
     val tmpStore = new TierStore(spark, tmp.toString)
-    // localCheckpoint: the measurement frame materializes once; every
-    // tier and the catalog derive from it
+    // localCheckpoint: the measurement frame materializes once; the raw
+    // tier and the catalog derive from it, every other tier from the raw
     val meas = measurements.localCheckpoint()
-    var prev = Rollup.rawTier(Rollup.Counter, meas).localCheckpoint()
-    tmpStore.append("counter", Rollup.RawGroupMs, prev)
-    Rollup.StandardTiers.foreach { d =>
-      prev = Rollup.tierUp(Rollup.Counter, prev, d).localCheckpoint()
-      tmpStore.append("counter", d, prev)
-    }
+    RollupJob.rollUp(tmpStore, Rollup.Counter, "counter", meas)()
     meas.select(col("metric")).distinct()
       .selectExpr("metric AS name", "'counter' AS mtype")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")

@@ -16,11 +16,14 @@ import graft.sources.TierStore
   *  - 5 s raw pre-aggregation groups ≙ streaming window("5 seconds")
   *    with the hdr_sketch aggregate (reference:
   *    store/MetricMeasurementStore.scala:24-25)
-  *  - higher tiers: incremental batch jobs over the raw tier with a
-  *    per-tier closed-bucket cursor (reference cursor semantics:
+  *  - higher tiers: one incremental batch pass per kind and tick. It
+  *    reads the raw sink once, from the lowest tier cursor, and builds
+  *    every tier from that read with [[Rollup.cascade]]; each tier keeps
+  *    its own closed-bucket cursor (reference cursor semantics:
   *    model/TimeWindow.scala:40-65) — chaining streaming aggs directly
   *    is restricted in Spark, and the cursor design is what the
-  *    reference does anyway.
+  *    reference does anyway. Batch [[graft.rollup.RollupJob]] is the
+  *    same cascade run from empty cursors.
   *
   * All sinks — the streaming raw tiers and the cascade tier tables —
   * are `bucket_date`-partitioned parquet (the raw sinks via
@@ -144,60 +147,41 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
 
   /** Counter cascade increment: counts just add. */
   def runCounterCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    cascade(Rollup.Counter, CounterKind, counterRawTierPath, counterTierPath, tiers)
+    increment(Rollup.Counter, CounterKind, counterRawTierPath, tiers)
 
-  /** One incremental cascade pass: for each tier (smallest→largest),
-    * roll fully-closed source buckets past the tier's cursor into the
-    * tier table, then advance the cursor — the reference's
-    * TimeWindowChain, as idempotent batch increments over parquet. */
+  /** One incremental cascade pass: every tier (smallest→largest) rolls
+    * its fully-closed buckets past its cursor into its tier table, then
+    * advances the cursor — the reference's TimeWindowChain, as
+    * idempotent batch increments over parquet. */
   def runCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    cascade(Rollup.Histogram, HistKind, rawTierPath, tierPath, tiers)
+    increment(Rollup.Histogram, HistKind, rawTierPath, tiers)
 
-  private def cascade(kind: Rollup.Kind, storeKind: String, rawPath: String,
-                      tierOf: Long => String, tiers: Seq[Long]): Unit = {
-    var sourcePath = rawPath
-    tiers.foreach { d =>
-      val cursor = readCursor(storeKind, d)
-      spark.catalog.refreshByPath(sourcePath)
-      // a bucket of duration d is closed once the source tier holds
-      // nothing before its end; process (cursor, maxClosed]. The probe
-      // is cursor-date-pruned like the increment read: on a long-lived
-      // tier it lists only partitions near the cursor, and partitions
-      // older than the cursor day may legitimately no longer exist
-      // (enforceRawRetention)
-      val maxSource = readSliceFrom(sourcePath, cursor)
-        .agg(max(col("bucket_start"))).collect()(0)
-      if (!maxSource.isNullAt(0)) {
-        val closedUpTo = (maxSource.getLong(0) / d) * d - 1 // last fully closed bucket end
-        if (closedUpTo > cursor) {
-          store.append(storeKind, d,
-            Rollup.tierUp(kind, readSlice(sourcePath, cursor, closedUpTo), d))
-          writeCursor(storeKind, d, closedUpTo)
-        }
+  /** One pass of a kind: a probe for the raw sink's newest bucket, which
+    * closes each tier's buckets ([[Rollup.Span.closedAt]]), and one read
+    * of the raw sink from the lowest cursor on, materialized once for
+    * every tier. Both are pruned to the lowest cursor's day: on a
+    * long-lived sink they list only partitions near it, and partitions
+    * before that day may legitimately no longer exist
+    * ([[enforceRawRetention]]). The first pass has cursor =
+    * Long.MinValue, no finite lower date. */
+  private def increment(kind: Rollup.Kind, storeKind: String, rawPath: String,
+                        tiers: Seq[Long]): Unit = {
+    val cursors = tiers.map(readCursor(storeKind, _))
+    val from = cursors.min
+    spark.catalog.refreshByPath(rawPath)
+    val all = TierStore.read(spark, rawPath)
+    val raw = (if (from >= 0L) all.where(col("bucket_date") >= lit(TierStore.utcDateOf(from)))
+               else all).where(col("bucket_start") > from)
+    val newest = raw.agg(max(col("bucket_start"))).head()
+    if (!newest.isNullAt(0)) {
+      val spans = tiers.zip(cursors).map { case (d, cursor) =>
+        Rollup.Span.closedAt(d, cursor, newest.getLong(0))
       }
-      sourcePath = tierOf(d)
+      Rollup.cascade(kind, raw.drop("bucket_date"), spans).emit { (span, rows) =>
+        store.append(storeKind, span.durationMs, rows)
+        writeCursor(storeKind, span.durationMs, span.closed)
+      }
     }
-  }
-
-  /** Incremental slice (fromExclusive, toInclusive] with the date
-    * partition filter derived from the bounds, so a cascade pass over a
-    * long-lived tier lists only the partitions near its cursor instead
-    * of every file ever written. */
-  private def readSlice(path: String, fromExclusive: Long, toInclusive: Long): DataFrame =
-    readSliceFrom(path, fromExclusive)
-      .where(col("bucket_date") <= lit(TierStore.utcDateOf(toInclusive)))
-      .where(col("bucket_start") <= toInclusive)
-      .drop("bucket_date")
-
-  /** Lower-bounded slice, `bucket_date` retained for further pruning.
-    * The first pass has cursor = Long.MinValue — no finite lower date. */
-  private def readSliceFrom(path: String, fromExclusive: Long): DataFrame = {
-    val all = TierStore.read(spark, path)
-    val pruned =
-      if (fromExclusive >= 0L)
-        all.where(col("bucket_date") >= lit(TierStore.utcDateOf(fromExclusive)))
-      else all
-    pruned.where(col("bucket_start") > fromExclusive)
   }
 
   def tier(d: Long): DataFrame = store.readAll(HistKind, d)
@@ -205,19 +189,20 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
   /** Retention for the RAW streaming sinks (reference TTLs raw buckets
     * at hours, not days — reference.conf:22-47): drops whole
     * `bucket_date` partition dirs that are BOTH past the ttl and
-    * strictly older than the first tier's cursor day. The cursor bound
-    * makes the drop safe-by-construction: only the first tier ever
-    * reads a raw sink, and every one of its reads — probe and
-    * increment — prunes to `bucket_date >= day(cursor)` before any file
-    * is opened, so a dropped partition is unreachable even through the
-    * sink's `_spark_metadata` listing. Data not yet rolled up is never
-    * dropped, whatever the ttl says. Returns dropped dirs per kind. */
+    * strictly older than the day of the lowest cursor of `tiers`. The
+    * cursor bound makes the drop safe-by-construction: every tier is
+    * built from the raw sink, and every read of it — probe and
+    * increment — prunes to `bucket_date >= day(lowest cursor)` before
+    * any file is opened, so a dropped partition is unreachable even
+    * through the sink's `_spark_metadata` listing. Data not yet rolled
+    * up into every tier is never dropped, whatever the ttl says.
+    * Returns dropped dirs per kind. */
   def enforceRawRetention(ttlMs: Long,
                           nowMs: Long = System.currentTimeMillis(),
-                          firstTier: Long = Rollup.StandardTiers.head): Map[String, Seq[String]] = {
+                          tiers: Seq[Long] = Rollup.StandardTiers): Map[String, Seq[String]] = {
     def dropFor(kind: String, rawDir: String): Seq[String] = {
-      val cursor = readCursor(kind, firstTier)
-      if (cursor == Long.MinValue) return Nil // nothing rolled up yet
+      val cursor = tiers.map(readCursor(kind, _)).min
+      if (cursor == Long.MinValue) return Nil // a tier has rolled nothing up yet
       val cursorDay = TierStore.utcDateOf(cursor).toLocalDate
       val ttlDay = java.time.LocalDate.ofInstant(
         java.time.Instant.ofEpochMilli(nowMs - ttlMs), java.time.ZoneOffset.UTC)

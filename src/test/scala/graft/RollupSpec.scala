@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class RollupSpec extends SparkSpec {
-  import RollupSpec.plainCascade
+  import RollupSpec.{alignedTop, plainCascade}
 
   private lazy val meas = Rollup.eventsAsMeasurements(Tables.events(spark, sf))
 
@@ -42,8 +42,7 @@ class RollupSpec extends SparkSpec {
     val plain = Rollup.histogramSummaries(
       plainCascade(Rollup.Histogram, Rollup.rawTier(Rollup.Histogram, meas))(3600000L))
       .orderBy("metric", "bucket_start").collect().toSeq
-    val aligned = Rollup.histogramSummaries(
-      Rollup.cascadeAlignedTop(Rollup.Histogram, meas))
+    val aligned = Rollup.histogramSummaries(alignedTop(Rollup.Histogram, meas))
       .orderBy("metric", "bucket_start").collect().toSeq
     assert(aligned == plain)
     // ONE real shuffle exchange in the aligned tier plan (the
@@ -51,8 +50,7 @@ class RollupSpec extends SparkSpec {
     // tier): the plain chain pays 1 + |tiers|. Counted on the plan TREE
     // (not a string grep, which would also match BroadcastExchange /
     // ReusedExchange and is brittle across AQE formatting).
-    val tierPlan = Rollup.cascadeAlignedTop(Rollup.Histogram, meas)
-      .queryExecution.executedPlan
+    val tierPlan = alignedTop(Rollup.Histogram, meas).queryExecution.executedPlan
     // the AQE wrapper is a leaf to collect(); count inside its input plan
     val inner = tierPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -69,13 +67,13 @@ class RollupSpec extends SparkSpec {
     val cPlain = plainCascade(Rollup.Counter, Rollup.rawTier(Rollup.Counter, counts),
       Seq(30000L, 60000L))(60000L)
       .orderBy("metric", "bucket_start").collect().toSeq
-    val cAligned = Rollup.cascadeAlignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
+    val cAligned = alignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
       .orderBy("metric", "bucket_start").collect().toSeq
     assert(cAligned == cPlain)
     // non-dividing tier durations must be rejected (the carried
     // top-bucket would not be functionally dependent)
     intercept[IllegalArgumentException] {
-      Rollup.cascadeAlignedTop(Rollup.Histogram, meas, Seq(40000L, 60000L))
+      alignedTop(Rollup.Histogram, meas, Seq(40000L, 60000L))
     }
   }
 
@@ -103,11 +101,24 @@ class RollupSpec extends SparkSpec {
 
 object RollupSpec {
 
-  /** The plain per-step cascade: every tier is one [[Rollup.tierUp]]
-    * (one exchange) over the tier before it, starting from `raw`. The
-    * reference the aligned and streaming cascades are checked against;
-    * the library keeps only the faster shapes. */
+  /** One cascade step: a tier at a finer resolution → the tier at
+    * `durationMs` (merge under the coarser bucket, one exchange). */
+  def tierUp(kind: Rollup.Kind, prev: DataFrame, durationMs: Long): DataFrame = {
+    graft.functions.ensureRegistered(prev.sparkSession)
+    prev.groupBy(col("metric"), Rollup.bucketOf(col("bucket_start"), durationMs).as("bucket_start"))
+      .agg(kind.mergeAgg)
+  }
+
+  /** The plain per-step cascade: every tier is one [[tierUp]] over the
+    * tier before it, starting from `raw`. The reference the one-exchange
+    * [[Rollup.cascade]] is checked against, batch and streaming; the
+    * library keeps only the faster shape. */
   def plainCascade(kind: Rollup.Kind, raw: DataFrame,
                    tiers: Seq[Long] = Rollup.StandardTiers): Map[Long, DataFrame] =
-    tiers.zip(tiers.scanLeft(raw)(Rollup.tierUp(kind, _, _)).tail).toMap
+    tiers.zip(tiers.scanLeft(raw)(tierUp(kind, _, _)).tail).toMap
+
+  /** The coarsest of `tiers` over every bucket of `meas`, by [[Rollup.cascade]]. */
+  def alignedTop(kind: Rollup.Kind, meas: DataFrame,
+                tiers: Seq[Long] = Rollup.StandardTiers): DataFrame =
+    Rollup.cascade(kind, meas, tiers.map(Rollup.Span(_))).top
 }

@@ -1490,7 +1490,7 @@ class StreamingSpec extends SparkSpec {
     // single ingested day, nothing may drop (cursor guard) even at
     // ttl 0; the cascade still reads the sink cleanly afterwards
     val rawDropped = si.enforceRawRetention(ttlMs = 0L,
-      nowMs = T0 + 40L * 86400000L, firstTier = 30000L)
+      nowMs = T0 + 40L * 86400000L, tiers = Seq(30000L))
     assert(rawDropped(graft.streaming.StreamingIngest.HistKind).isEmpty,
       "cursor-day raw partition dropped")
     si.runCascadeIncrement(Seq(30000L)) // no error, no new data
@@ -1579,7 +1579,7 @@ class StreamingSpec extends SparkSpec {
     // fully rolled) — only days strictly before it drop
     def rawDate(ms: Long) = "bucket_date=" + graft.sources.TierStore.utcDateOf(ms)
     val rawDropped = si.enforceRawRetention(ttlMs = 0L, nowMs = T0 + 3 * DAY,
-      firstTier = 30000L)
+      tiers = Seq(30000L))
     assert(rawDropped(Counter).sorted == Seq(rawDate(T0), rawDate(T0 + DAY)))
     val rawLeft = new java.io.File(si.counterRawTierPath).listFiles().map(_.getName)
     assert(rawLeft.contains(rawDate(T0 + 2 * DAY)),
@@ -1707,6 +1707,139 @@ class StreamingSpec extends SparkSpec {
     si.runCounterCascadeIncrement(Seq(30000L))
     assert(si.readCursor(StreamingIngest.CounterKind, 30000L) == T0 + 210000L - 1)
     assert(tierRows() == 7L && !Files.exists(tmp))
+  }
+
+  /** Every tier of both kinds in `si`'s store equals the plain batch
+    * chain over the raw sinks up to the tier's cursor, sketches byte for
+    * byte, and holds exactly the on-time `posted` values up to its cursor:
+    * (metric, ts, value, counter). */
+  private def assertTiersEqualBatch(si: StreamingIngest,
+                                    posted: Seq[(String, Long, Long, Boolean)]): Unit = {
+    import graft.rollup.Rollup
+    def rows(df: org.apache.spark.sql.DataFrame, column: String): Seq[(String, Long, Any)] =
+      df.select("metric", "bucket_start", column).orderBy("metric", "bucket_start").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.get(2) match {
+          case b: Array[Byte] => b.toSeq
+          case x => x
+        })).toSeq
+    def check(kind: Rollup.Kind, storeKind: String, rawPath: String, counter: Boolean): Unit = {
+      spark.catalog.refreshByPath(rawPath)
+      val batch = RollupSpec.plainCascade(kind, spark.read.parquet(rawPath).drop("bucket_date"))
+      Rollup.StandardTiers.foreach { d =>
+        val cursor = si.readCursor(storeKind, d)
+        spark.catalog.refreshByPath(si.store.path(storeKind, d))
+        val tier = si.store.readAll(storeKind, d)
+        val got = rows(tier, kind.column)
+        assert(got.nonEmpty, s"$storeKind tier $d closed no bucket")
+        assert(got == rows(batch(d).where(col("bucket_start") <= cursor), kind.column),
+          s"$storeKind tier $d differs from the batch cascade")
+        val total = (if (counter) tier else Rollup.histogramSummaries(tier))
+          .agg(sum(col("count"))).head().getLong(0)
+        val want = posted.collect { case (_, ts, v, c) if c == counter && ts <= cursor =>
+          if (counter) v else 1L }.sum
+        assert(total == want, s"$storeKind tier $d holds $total, posted on time $want")
+      }
+    }
+    check(Rollup.Histogram, StreamingIngest.HistKind, si.rawTierPath, counter = false)
+    check(Rollup.Counter, StreamingIngest.CounterKind, si.counterRawTierPath, counter = true)
+  }
+
+  test("streaming cascade property: random batch splits over 2-4 ticks equal the batch cascade; late rows reach no tier") {
+    import org.apache.spark.sql.streaming.Trigger
+    val metrics = Seq("lat_a" -> "timer", "lat_b" -> "gauge", "req_a" -> "counter", "req_b" -> "counter")
+    val SpanMs = 9000000L // 2.5 h of event time: the 1 h tier closes two buckets
+    for (seed <- 1 to 5) {
+      val rnd = new scala.util.Random(seed)
+      val base = Files.createTempDirectory(s"graft_cascade_prop$seed").toString
+      val in = s"$base/in"
+      Files.createDirectories(Paths.get(in))
+      val si = new StreamingIngest(spark, base)
+      val stream = si.readJsonStream(in)
+      def value(mtype: String): Long =
+        if (mtype == "counter") 1L + rnd.nextInt(5) else rnd.nextInt(2000).toLong
+      // one event per 20 s per metric, cut into 2-4 ticks at random times
+      val events = metrics.flatMap { case (m, t) =>
+        (0L until SpanMs by 20000L).map(o => (m, t, T0 + 1 + o + rnd.nextInt(20000))) }
+      val nTicks = 2 + rnd.nextInt(3)
+      val cuts = (Seq.fill(nTicks - 1)(T0 + 600000L + (rnd.nextDouble() * (SpanMs - 1200000L)).toLong)
+        .sorted :+ Long.MaxValue)
+      // (metric, ts, value, counter) of every on-time value
+      val posted = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Boolean)]
+      var late = 0
+      cuts.zipWithIndex.foreach { case (cut, tick) =>
+        val from = if (tick == 0) Long.MinValue else cuts(tick - 1)
+        val onTime = events.filter { case (_, _, ts) => ts >= from && ts < cut }
+        // per stream, against the newest event of the ticks before: rows up
+        // to 25 s behind it (inside the 30 s watermark, into 5 s buckets
+        // still open) and rows 2-10 min behind it (past the watermark)
+        val behind = if (tick == 0) Nil else metrics.flatMap { case (m, t) =>
+          val newest = posted.collect { case (_, ts, _, c) if c == (t == "counter") => ts }.max
+          Seq.fill(2)((m, t, newest - rnd.nextInt(25000), false)) ++
+            Seq.fill(2)((m, t, newest - 120000L - rnd.nextInt(480000), true))
+        }
+        val rows = rnd.shuffle(onTime.map { case (m, t, ts) => (m, t, ts, false) } ++ behind)
+          .map { case (m, t, ts, isLate) => (m, t, ts, value(t), isLate) }
+        rows.foreach { case (m, t, ts, v, isLate) =>
+          if (isLate) late += 1 else posted += ((m, ts, v, t == "counter")) }
+        // the tick's rows land as 1-3 files of random sizes
+        val files = 1 + rnd.nextInt(3)
+        rows.groupBy(_ => rnd.nextInt(files)).foreach { case (f, part) =>
+          dropFile(in, s"tick${tick}_$f.json",
+            part.map { case (m, t, ts, v, _) => line(m, t, ts, Seq(v.toDouble)) })
+        }
+        val sinks = Seq(si.startRawTier(stream, Trigger.AvailableNow()),
+          si.startCounterTier(stream, Trigger.AvailableNow()))
+        sinks.foreach(_.awaitTermination())
+        si.runCascadeIncrement()
+        si.runCounterCascadeIncrement()
+      }
+      assert(late > 0)
+      withClue(s"seed $seed, $nTicks ticks: ")(assertTiersEqualBatch(si, posted.toSeq))
+    }
+  }
+
+  test("raw retention keeps the lowest cursor's day: a 1 h cursor lagging across a UTC day boundary still rolls up") {
+    import graft.rollup.Rollup
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val DAY = 86400000L
+    val H = 3600000L
+    val B = T0 + 2 * DAY // the UTC day boundary the 1 h cursor lags across
+    val base = Files.createTempDirectory("graft_raw_retention").toString
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    val si = new StreamingIngest(spark, base)
+    val stream = si.readJsonStream(in)
+    val posted = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def tick(name: String, from: Long, to: Long): Unit = {
+      val ts = from until to by 15000L
+      ts.foreach(t => posted += (("reqs", t, 1L + t / 15000L % 3)))
+      dropFile(in, s"$name.json", ts.map(t => line("reqs", "counter", t, Seq(1.0 + t / 15000L % 3))))
+      si.startCounterTier(stream, Trigger.AvailableNow()).awaitTermination()
+      si.runCounterCascadeIncrement()
+    }
+    def rawDate(ms: Long) = "bucket_date=" + graft.sources.TierStore.utcDateOf(ms)
+    tick("d0", T0 + 12 * H, T0 + 12 * H + 600000L)
+    tick("d1", B - 2 * H, B + 600000L)
+    // the 30 s tier is past midnight; the 1 h tier's cursor is the
+    // previous day's last millisecond
+    assert(si.readCursor(StreamingIngest.CounterKind, 30000L) >= B)
+    assert(si.readCursor(StreamingIngest.CounterKind, H) == B - 1)
+    val dropped = si.enforceRawRetention(ttlMs = 0L, nowMs = B + 10 * DAY)
+    assert(dropped(StreamingIngest.CounterKind) == Seq(rawDate(T0)))
+    assert(new java.io.File(si.counterRawTierPath).list().contains(rawDate(B - 1)),
+      "the 1 h cursor's day was dropped")
+    tick("d2", B + 600000L, B + H + 1200000L)
+    val cursor = si.readCursor(StreamingIngest.CounterKind, H)
+    assert(cursor == B + H - 1)
+    val want = RollupSpec.plainCascade(Rollup.Counter,
+        Rollup.rawTier(Rollup.Counter, posted.toSeq.toDF("metric", "ts_ms", "value")))(H)
+      .where(col("bucket_start") <= cursor)
+    spark.catalog.refreshByPath(si.counterTierPath(H))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("metric", "bucket_start", "count").orderBy("bucket_start").collect().toSeq
+    assert(rows(si.store.readAll(StreamingIngest.CounterKind, H)) == rows(want))
+    assert(rows(want).map(_.getLong(1)) == Seq(T0 + 12 * H, B - 2 * H, B - H, B))
   }
 
   test("streaming sessions: in-stream gap split, watermark timeout, final emission") {

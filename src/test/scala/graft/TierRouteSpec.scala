@@ -21,7 +21,7 @@ class TierRouteSpec extends SparkSpec {
   private lazy val base: String = {
     val dir = Files.createTempDirectory("graft_tierroute").toString
     // raw 5 s tier from synthetic measurements: 3 metrics × 3 hours of
-    // sparse raw buckets, then the cascade's own tierUp materializes 1h
+    // sparse raw buckets, then the one-step reference RollupSpec.tierUp materializes 1h
     import spark.implicits._
     val meas = (0 until 3).flatMap { m =>
       (0 until 180).map { i =>
@@ -31,7 +31,7 @@ class TierRouteSpec extends SparkSpec {
     val raw = Rollup.rawTier(Rollup.Histogram, meas)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     raw.write.partitionBy("bucket_date").parquet(s"$dir/tier_raw")
-    val hour = Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
+    val hour = RollupSpec.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     hour.write.partitionBy("bucket_date").parquet(s"$dir/tier_$Hour")
     dir
@@ -179,7 +179,7 @@ class TierRouteSpec extends SparkSpec {
     val raw = Rollup.rawTier(Rollup.Histogram, meas)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     raw.write.partitionBy("bucket_date").parquet(s"$dir/hist_5000")
-    val hour = Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/hist_5000"), Hour)
+    val hour = RollupSpec.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/hist_5000"), Hour)
       .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     hour.write.partitionBy("bucket_date").parquet(s"$dir/hist_$Hour")
     def q(): DataFrame = rebucket(spark.read.parquet(s"$dir/hist_5000"))
@@ -209,7 +209,7 @@ class TierRouteSpec extends SparkSpec {
         .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
         .write.mode("append").partitionBy("bucket_date").parquet(s"$dir/tier_raw")
     def tierUpAll(): DataFrame =
-      Rollup.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
+      RollupSpec.tierUp(Rollup.Histogram, spark.read.parquet(s"$dir/tier_raw"), Hour)
         .withColumn("bucket_date", graft.sources.TierStore.utcDate(col("bucket_start")))
     // day 0 rolled up; then day 1 lands in raw with NO cascade run
     writeRaw(measOn(0L))

@@ -90,6 +90,16 @@ class TierStoreSpec extends SparkSpec {
     assert(names.count(_.startsWith("bucket_date=")) == 3)
     assert(store.readAll("hist", 5000L).count() == 3)
     assert(store.slice("hist", 5000L, 1704067200000L, 1704067200000L).count() == 1)
+    // one schema per table: the INT append was up-cast to the legacy
+    // files' BIGINT, so every file reads with the one sidecar schema
+    assert(store.readAll("hist", 5000L).orderBy("bucket_start").collect()
+      .map(_.getAs[Long]("count")).toSeq == Seq(0L, 1L, 9L))
+    // a column that would not fit the stored type is refused, not recorded
+    val wide = spark.range(1).selectExpr("'m' AS metric",
+      "1704326400000 AS bucket_start", "CAST(9 AS DECIMAL(20,0)) AS count")
+    val e = intercept[IllegalArgumentException](store.append("hist", 5000L, wide))
+    assert(Seq("count", "BIGINT", "DECIMAL(20,0)").forall(e.getMessage.contains), e.getMessage)
+    assert(store.readAll("hist", 5000L).count() == 3)
   }
 
   test("schema sidecar: written by append, atomically and once per schema; reads skip inference") {

@@ -22,13 +22,13 @@ object RollupAB {
       Rollup.histogramSummaries(plain(Rollup.Histogram, meas, Rollup.StandardTiers))
         .orderBy("metric", "bucket_start")
     def aligned1h =
-      Rollup.histogramSummaries(Rollup.cascadeAlignedTop(Rollup.Histogram, meas))
+      Rollup.histogramSummaries(graft.RollupSpec.alignedTop(Rollup.Histogram, meas))
         .orderBy("metric", "bucket_start")
     def counts = Tables.events(spark, dir).select(
       col("event_type").as("metric"), col("ts_ms"), lit(1L).as("value"))
     def plainC = plain(Rollup.Counter, counts, Seq(30000L, 60000L))
       .orderBy("metric", "bucket_start")
-    def alignedC = Rollup.cascadeAlignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
+    def alignedC = graft.RollupSpec.alignedTop(Rollup.Counter, counts, Seq(30000L, 60000L))
       .orderBy("metric", "bucket_start")
     def time(f: => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime(); graft.Bench.force(f); (System.nanoTime() - t0) / 1e9

@@ -21,8 +21,11 @@ import org.apache.spark.sql.functions._
   *    swap, the snapshot twins' `state__tmp`/`state__old` pairs,
   *    compaction's `__compact_new`/`__compact_old`) writes a TMP name,
   *    renames the primary aside to an OLD name, publishes, then drops
-  *    OLD. A crash can strand either name: a stranded TMP is always
-  *    disposable (data never lives only there), a stranded OLD beside
+  *    OLD. A crash can strand either name: a stranded TMP is
+  *    disposable (data never lives only there) unless it is a tier
+  *    store's staged increment that its kind's commit record names
+  *    (`TierStore.commit`) — that one is pending, and the next
+  *    increment publishes it. A stranded OLD beside
   *    a live primary is the post-publish cleanup that never ran, and
   *    an OLD with NO primary is the recoverable mid-swap crash that
   *    the owner's next read heals via `recoverSwap`. The doctor
@@ -99,6 +102,10 @@ object StoreDoctor {
     if (!f.isDirectory) return Nil
     val name = f.getName
     TmpSuffixes.find(name.endsWith) match {
+      case Some(_) if graft.sources.TierStore.committedStages(f.getParentFile)(name) =>
+        return Seq(Finding(f.getPath, "pending-commit",
+          "a tier increment committed but not yet published; its data lives " +
+            "only here until the next increment finishes it — do not delete"))
       case Some(_) =>
         return Seq(Finding(f.getPath, "orphaned-staging",
           "stranded staging copy from a crashed publish; the data never " +

@@ -18,7 +18,7 @@ import graft.functions.{ensureRegistered, hdr_merge, hdr_sketch, hdr_summary}
   * the one chain: every driver — [[RollupJob]] and the curation publish
   * (every bucket), the streaming increments (each tier's newly closed
   * buckets past its cursor), the k_* queries — calls it and only chooses
-  * the spans and what to do with each tier's rows.
+  * the spans and where the tiers' rows go.
   *
   * Scale design: every stage is one `groupBy(metric, bucket)` over data
   * already collapsed to one row per (metric, finer-bucket) — after the
@@ -96,22 +96,35 @@ object Rollup {
   /** The tiers of one [[cascade]] run, smallest first: each non-empty
     * span with its tier's rows (metric, bucket_start, kind.column), built
     * lazily from one lineage. */
-  final class Tiers private[Rollup] (val rows: Seq[(Span, DataFrame)], stages: Seq[DataFrame]) {
-    /** The coarsest tier's rows. */
-    def top: DataFrame = rows.last._2
+  final class Tiers private[Rollup] (rows: Seq[(Span, DataFrame)]) {
+    /** The non-empty spans, smallest first. */
+    def spans: Seq[Span] = rows.map(_._1)
 
-    /** Hands each tier to `f`, smallest first, with every stage of the
-      * chain — the aligned raw rows, then each whole tier — materialized
-      * once, by the first tier that reads it, so no tier recomputes the
-      * stages below it. They are released when the last tier is done or
-      * `f` fails. */
-    def emit(f: (Span, DataFrame) => Unit): Unit =
-      if (rows.nonEmpty) {
-        try {
-          stages.foreach(_.cache())
-          rows.foreach { case (span, tier) => f(span, tier) }
-        } finally stages.foreach(_.unpersist())
-      }
+    /** The coarsest tier's rows. */
+    def top: DataFrame = rows.last._1.cut(rows.last._2)
+
+    /** Every span's rows as one frame (metric, bucket_start, kind.column,
+      * tier), `tier` being the span's duration in ms: one plan, so one
+        * action writes every tier. Each tier is cut to its span by a join
+      * with the spans, not by a filter per branch: the optimizer would
+      * push such a filter below the aligned exchange, a different one
+      * into each branch, and every branch would shuffle on its own. Cut
+      * after the union, every branch reads the one aligned exchange (the
+      * physical plan reuses it), so no stage is cached; a branch does
+      * recompute the merge stages below its tier, which run on rows
+      * already collapsed to one per (metric, bucket). */
+    def frame: DataFrame = {
+      val all = rows.map { case (span, tier) => tier.withColumn("tier", lit(span.durationMs)) }
+        .reduce(_ unionAll _)
+      val bounds = all.sparkSession.createDataFrame(spans.map(s => (s.durationMs, s.cursor, s.closed)))
+        .toDF("tier", "__after", "__upto")
+      // null-safe: from a plain comparison the optimizer would infer a
+      // not-null filter on each tier's bucket and push it, again one per
+      // branch, below the aligned exchange
+      all.join(broadcast(bounds), "tier")
+        .where((col("bucket_start") > col("__after") && col("bucket_start") <= col("__upto")) <=> true)
+        .select(all.columns.map(col): _*)
+    }
   }
 
   /** The rollup cascade: every tier in `spans` (ascending durations,
@@ -163,15 +176,14 @@ object Rollup {
           bucketOf(col("bucket_start"), s.durationMs).as("bucket_start"))
         .agg(kind.mergeAgg)
     }
-    val stages = finer :+ finer.last.groupBy(col("metric"), col("__top").as("bucket_start"))
-      .agg(kind.mergeAgg)
     val rows = finer.tail.map(_.select(col("metric"), col("bucket_start"), col(kind.column))) :+
-      stages.last
-    new Tiers(spans.zip(rows).collect { case (s, tier) if !s.isEmpty => s -> s.cut(tier) }, stages)
+      finer.last.groupBy(col("metric"), col("__top").as("bucket_start")).agg(kind.mergeAgg)
+    new Tiers(spans.zip(rows).filterNot(_._1.isEmpty))
   }
 
   /** Bucket tier → summary table: one wide row per (metric, bucket)
-    * (reference: model/HistogramSummary.scala:21).
+    * (reference: model/HistogramSummary.scala:21). Columns other than
+    * the sketch (a [[Tiers.frame]]'s `tier`) are kept.
     *
     * The struct expands through `inline(array(...))`, not
     * `.select("s.*")`: star-expanding a projected struct collapses into
@@ -180,8 +192,8 @@ object Rollup {
     * it once. */
   def histogramSummaries(tier: DataFrame): DataFrame = {
     ensureRegistered(tier.sparkSession)
-    tier.select(col("metric"), col("bucket_start"),
-      inline(array(hdr_summary(col("sketch")))))
+    tier.select(tier.columns.filter(_ != "sketch").map(col) :+
+      inline(array(hdr_summary(col("sketch")))): _*)
   }
 
   /** Events table → timer-style measurements: metric = event_type,

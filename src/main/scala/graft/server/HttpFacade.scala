@@ -55,6 +55,7 @@ class HttpFacade(spark: SparkSession,
 
   /** Start listening; returns the bound port (ephemeral when port=0). */
   def start(): Int = {
+    HttpFacade.init()
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/khronus/version", (ex: HttpExchange) =>
       if (!preflight(ex)) respond(ex, 200, Version.json))
@@ -207,6 +208,18 @@ class HttpFacade(spark: SparkSession,
 }
 
 object HttpFacade {
+  /** TCP_NODELAY on every accepted connection. The JDK server writes a
+    * response's headers and body separately and leaves Nagle's algorithm
+    * on unless this property is set; against the client's delayed ACK
+    * that stalls each GET by about 40 ms. The JDK reads the property
+    * once per JVM, when its server configuration class loads, so it is
+    * set here, before the first `HttpServer.create`. */
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** Initializes this object, and so sets the property above; every
+    * [[HttpFacade.start]] calls it before creating its server. */
+  private[server] def init(): Unit = ()
+
   /** Reference CORS surface (util/CORSDirective.scala:37-41). */
   val CorsHeaders: Seq[(String, String)] = Seq(
     "Access-Control-Allow-Methods" -> "GET, POST, PUT, DELETE, OPTIONS",

@@ -1,9 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -20,46 +20,123 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - retention = partition drops (the reference's per-tier TTL —
   *    reference.conf:22-47): deleting a day directory is O(1) metadata,
   *    no compaction or tombstones at any scale.
-  *  - writes append per closed bucket window, so files arrive in
-  *    date-partition order and never rewrite old partitions.
+  *  - every write is staged, then published: a frame holding any
+  *    number of a kind's tiers (a `tier` column of durations) is
+  *    written once, partitioned by (tier, bucket_date), into a staging
+  *    dir beside the tables, and its files are then moved into each
+  *    tier's date partitions ([[stage]], [[publish]]). Files arrive in
+  *    date-partition order and old partitions are never rewritten;
+  *    each (tier, date) gets one file per write.
+  *  - a kind's commit record ([[commit]]) names the staged increment
+  *    with every tier's new cursor before any file moves, so an
+  *    increment is published exactly once across a crash.
   */
 class TierStore(spark: SparkSession, baseDir: String) {
+  import TierStore.{CommitRecord, StageSuffix}
 
   def path(kind: String, durationMs: Long): String = s"$baseDir/${kind}_$durationMs"
 
   private def withDate(df: DataFrame): DataFrame =
     df.withColumn("bucket_date", TierStore.utcDate(col("bucket_start")))
 
-  /** Append tier rows (metric, bucket_start, payload…) date-partitioned.
-    * Rows are shuffled onto their date before the write, into one
-    * partition per core, so each date directory gets exactly one file
-    * (for tier tables — post-aggregation rows of a few hundred bytes —
-    * one file is enough), instead of every write task spraying a sliver
-    * into every date. The explicit partition count keeps adaptive
-    * execution from coalescing the shuffle into one task, so a many-day
-    * append (a RollupJob tier: one file per day) writes on every core.
-    * Small-file counts are what kill both this write and every later
-    * read's file listing.
+  /** Append one tier's rows (metric, bucket_start, payload…): the
+    * one-tier case of [[write]]. */
+  def append(kind: String, durationMs: Long, tier: DataFrame): Unit =
+    write(kind, Seq(durationMs), tier.withColumn("tier", lit(durationMs)))
+
+  /** Stage, then publish, the rows of `tiers` (metric, bucket_start,
+    * payload…, tier) into tables `kind` × `tiers`. */
+  def write(kind: String, tiers: Seq[Long], rows: DataFrame): Unit =
+    publish(kind, stage(kind, tiers, rows))
+
+  /** Step 1 of a write: every row of `rows` (metric, bucket_start,
+    * payload…, tier) in one Parquet write, into a fresh staging dir of
+    * this store's base; returns its id. Rows are shuffled onto their
+    * (tier, date) before the write, into one partition per core, so
+    * each (tier, date) gets exactly one file (tier rows are a few
+    * hundred bytes post-aggregation; one file is enough), instead of
+    * every write task spraying a sliver into every date. The explicit
+    * partition count keeps adaptive execution from coalescing the
+    * shuffle into one task, so a many-day write (a RollupJob tier: one
+    * file per day) runs on every core. Small-file counts are what kill
+    * both this write and every later read's file listing.
     *
     * A table written by a pre-partitioning version of this store (flat
-    * parquet files at the directory top level) is migrated in place on
-    * first append: appending partitioned files next to flat ones would
-    * break partition discovery for every subsequent reader.
+    * parquet files at the directory top level) is migrated in place
+    * first: partitioned files next to flat ones would break partition
+    * discovery for every subsequent reader.
     *
-    * A table keeps one schema: a column the table already holds is
-    * up-cast to the stored type, and an append that would need a lossy
-    * cast is refused, since readers read every file with the one sidecar
-    * schema. */
-  def append(kind: String, durationMs: Long, tier: DataFrame): Unit = {
-    migrateFlatLayout(kind, durationMs)
-    val p = path(kind, durationMs)
-    val dated = conform(p, withDate(tier))
-    dated.repartition(spark.sparkContext.defaultParallelism, col("bucket_date")).write
-      .mode(SaveMode.Append)
-      .partitionBy("bucket_date")
-      .parquet(p)
-    TierStore.writeSchema(p, dated.schema)
+    * A table keeps one schema: a column a table of `tiers` already
+    * holds is up-cast to the stored type, and a write that would need
+    * a lossy cast, for any of the tables, is refused, since readers
+    * read every file with the one sidecar schema.
+    *
+    * The staging dir holds one `tier=` dir per tier of `tiers`, rows or
+    * not, and last the sidecar schema its tables take, which marks the
+    * stage complete. */
+  private[graft] def stage(kind: String, tiers: Seq[Long], rows: DataFrame): String = {
+    tiers.foreach(migrateFlatLayout(kind, _))
+    val dated = tiers.foldLeft(withDate(rows))((df, d) => conform(path(kind, d), df))
+    val id = java.util.UUID.randomUUID().toString
+    val dir = stagingDir(kind, id)
+    dated.repartition(spark.sparkContext.defaultParallelism, col("tier"), col("bucket_date"))
+      .write.partitionBy("tier", "bucket_date").parquet(dir.toString)
+    tiers.foreach(d => Files.createDirectories(dir.resolve(s"tier=$d")))
+    TierStore.writeSchema(dir.toString, dated.drop("tier").schema)
+    id
   }
+
+  /** Step 2 of a streaming increment: atomically replace `kind`'s commit
+    * record with the staged increment `id` and every tier's cursor. From
+    * here on the increment is committed: its cursors are the ones read,
+    * and [[recover]] publishes it if [[publish]] did not finish. */
+  private[graft] def commit(kind: String, id: String, cursors: Map[Long, Long]): Unit =
+    TierStore.replace(Paths.get(baseDir, CommitRecord + kind),
+      (s"stage $id" +: cursors.toSeq.sorted.map { case (d, c) => s"$d $c" }).mkString("\n"))
+
+  /** `kind`'s commit record: the last committed staging id and every
+    * tier's cursor; None before the first commit. */
+  private[graft] def committed(kind: String): Option[(String, Map[Long, Long])] =
+    TierStore.readCommit(Paths.get(baseDir, CommitRecord + kind))
+
+  /** Step 3 of a write: move each staged file into its table's date
+    * partition, write each table's sidecar, then delete the staging dir.
+    * Idempotent: a move already done left nothing behind to move again,
+    * and a dir whose sidecar is gone was already published and is only
+    * being deleted. Every staged tier's table dir exists afterwards, so
+    * readers see exactly what a per-table append left. */
+  private[graft] def publish(kind: String, id: String): Unit = {
+    val dir = stagingDir(kind, id)
+    TierStore.readSchema(dir.toString).foreach { schema =>
+      TierStore.children(dir).filter(_.getFileName.toString.startsWith("tier=")).foreach { t =>
+        val table = Paths.get(path(kind, t.getFileName.toString.stripPrefix("tier=").toLong))
+        TierStore.children(t).foreach { date =>
+          val dst = Files.createDirectories(table.resolve(date.getFileName))
+          TierStore.children(date).foreach { f =>
+            Files.move(f, dst.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+          }
+        }
+        TierStore.writeSchema(Files.createDirectories(table).toString, schema)
+      }
+    }
+    deleteRecursively(dir.toFile)
+  }
+
+  /** Crash recovery for `kind`, before its next stage: finishes
+    * publishing the increment its commit record names, and deletes
+    * every other staging dir of `kind`, which no record ever named. */
+  private[graft] def recover(kind: String): Unit = {
+    val pending = committed(kind).map(_._1)
+    TierStore.children(Paths.get(baseDir))
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith(s"$kind.") && n.endsWith(StageSuffix))
+      .map(_.stripPrefix(s"$kind.").stripSuffix(StageSuffix))
+      .foreach(id => if (pending.contains(id)) publish(kind, id)
+                     else deleteRecursively(stagingDir(kind, id).toFile))
+  }
+
+  private def stagingDir(kind: String, id: String): Path =
+    Paths.get(baseDir, s"$kind.$id$StageSuffix")
 
   /** `rows` with every column the table at `p` already holds cast to its
     * stored type: the sidecar's, or for a table written before sidecars
@@ -215,14 +292,49 @@ object TierStore {
     * for readers to fail on. Rewritten only when the schema changes. */
   def writeSchema(dir: String, schema: StructType): Unit = {
     val nullable = StructType(schema.map(_.copy(nullable = true)))
-    if (!readSchema(dir).contains(nullable)) {
-      val p = Paths.get(dir, SchemaSidecar)
-      Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(SchemaSidecar + ".tmp")
-      Files.write(tmp, nullable.json.getBytes(UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!readSchema(dir).contains(nullable)) replace(Paths.get(dir, SchemaSidecar), nullable.json)
   }
+
+  /** Atomic replace of a small file: `text` lands in a `.tmp` sibling
+    * that is renamed over `p`, so a write killed midway leaves only the
+    * temp file, never a truncated `p` for readers to trust. */
+  private[graft] def replace(p: Path, text: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    Files.write(tmp, text.getBytes(UTF_8))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Name prefix of a kind's commit record in a store's base dir. */
+  private val CommitRecord = "_commit_"
+
+  /** Name suffix of a staging dir (`<kind>.<id>.__stage`). */
+  private val StageSuffix = ".__stage"
+
+  private def readCommit(p: Path): Option[(String, Map[Long, Long])] =
+    if (!Files.exists(p)) None
+    else {
+      val lines = new String(Files.readAllBytes(p), UTF_8).split("\n").toSeq
+      Some(lines.head.stripPrefix("stage ") -> lines.tail.map { l =>
+        val Array(d, c) = l.split(' ')
+        d.toLong -> c.toLong
+      }.toMap)
+    }
+
+  /** The staging dir names the commit records in `dir` hold: staged
+    * increments that are committed, whose data may live only there until
+    * they are published. */
+  def committedStages(dir: java.io.File): Set[String] =
+    Option(dir.listFiles).toSeq.flatten
+      .filter(f => f.isFile && f.getName.startsWith(CommitRecord) && !f.getName.endsWith(".tmp"))
+      .flatMap { f =>
+        val kind = f.getName.stripPrefix(CommitRecord)
+        readCommit(f.toPath).map { case (id, _) => s"$kind.$id$StageSuffix" }
+      }.toSet
+
+  /** The entries of a directory; empty when it does not exist. */
+  private def children(dir: Path): Seq[Path] =
+    Option(dir.toFile.listFiles).toSeq.flatten.sortBy(_.getName).map(_.toPath)
 
   /** The sidecar schema of a table, if one has been written. */
   def readSchema(dir: String): Option[StructType] = {

@@ -111,7 +111,7 @@ object CurationMetrics {
     // localCheckpoint: the measurement frame materializes once; the raw
     // tier and the catalog derive from it, every other tier from the raw
     val meas = measurements.localCheckpoint()
-    RollupJob.rollUp(tmpStore, Rollup.Counter, "counter", meas)()
+    RollupJob.rollUp(tmpStore, Rollup.Counter, "counter", meas)
     meas.select(col("metric")).distinct()
       .selectExpr("metric AS name", "'counter' AS mtype")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")

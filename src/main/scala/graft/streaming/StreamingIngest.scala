@@ -22,8 +22,12 @@ import graft.sources.TierStore
   *    its own closed-bucket cursor (reference cursor semantics:
   *    model/TimeWindow.scala:40-65) — chaining streaming aggs directly
   *    is restricted in Spark, and the cursor design is what the
-  *    reference does anyway. Batch [[graft.rollup.RollupJob]] is the
-  *    same cascade run from empty cursors.
+  *    reference does anyway. Every tier's new rows land in one staged
+  *    Parquet write, and one commit record per kind carries every
+  *    tier's cursor, so an increment is published exactly once (the
+  *    file-sink log of Structured Streaming, across tiers). Batch
+  *    [[graft.rollup.RollupJob]] is the same cascade run from empty
+  *    cursors.
   *
   * All sinks — the streaming raw tiers and the cascade tier tables —
   * are `bucket_date`-partitioned parquet (the raw sinks via
@@ -50,7 +54,6 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
   def rawTierPath = s"$baseDir/tier_raw"
   def tierPath(d: Long) = store.path(StreamingIngest.HistKind, d)
   import StreamingIngest.{CounterKind, HistKind, MaxBytesPerTrigger}
-  private def cursorPath(kind: String, d: Long) = s"$baseDir/cursor_${kind}_$d"
 
   /** JSON-lines file stream → parsed measurements stream.
     *
@@ -147,39 +150,65 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
 
   /** Counter cascade increment: counts just add. */
   def runCounterCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    increment(Rollup.Counter, CounterKind, counterRawTierPath, tiers)
+    increment(CounterKind, tiers)
 
   /** One incremental cascade pass: every tier (smallest→largest) rolls
-    * its fully-closed buckets past its cursor into its tier table, then
-    * advances the cursor — the reference's TimeWindowChain, as
-    * idempotent batch increments over parquet. */
+    * its fully-closed buckets past its cursor into its tier table, and
+    * the cursors advance with them — the reference's TimeWindowChain, as
+    * exactly-once batch increments over parquet. */
   def runCascadeIncrement(tiers: Seq[Long] = Rollup.StandardTiers): Unit =
-    increment(Rollup.Histogram, HistKind, rawTierPath, tiers)
+    increment(HistKind, tiers)
 
-  /** One pass of a kind: a probe for the raw sink's newest bucket, which
-    * closes each tier's buckets ([[Rollup.Span.closedAt]]), and one read
-    * of the raw sink from the lowest cursor on, materialized once for
-    * every tier. Both are pruned to the lowest cursor's day: on a
-    * long-lived sink they list only partitions near it, and partitions
-    * before that day may legitimately no longer exist
-    * ([[enforceRawRetention]]). The first pass has cursor =
-    * Long.MinValue, no finite lower date. */
-  private def increment(kind: Rollup.Kind, storeKind: String, rawPath: String,
-                        tiers: Seq[Long]): Unit = {
+  /** One increment of a kind, in three steps: [[stage]] writes every
+    * tier's new rows in one Parquet write; the commit record then takes
+    * the staged id and every tier's new cursor in one atomic rename; the
+    * staged files are then published into the tier tables. A crash
+    * leaves either an uncommitted stage, which the next increment deletes
+    * and rolls again, or a committed one, which it publishes first
+    * ([[TierStore.recover]]): no increment is lost or rolled twice. */
+  private def increment(storeKind: String, tiers: Seq[Long]): Unit = {
+    store.recover(storeKind)
+    stage(storeKind, tiers).foreach { case (id, cursors) =>
+      store.commit(storeKind, id, cursors)
+      store.publish(storeKind, id)
+    }
+  }
+
+  /** Stage one increment of `storeKind`: a probe for the raw sink's
+    * newest bucket, which closes each tier's buckets
+    * ([[Rollup.Span.closedAt]]), one read of the raw sink from the lowest
+    * cursor on, and every tier with a newly closed bucket from that one
+    * read ([[Rollup.cascade]]), staged in one write. Both reads are
+    * pruned to the lowest cursor's day: on a long-lived sink they list
+    * only partitions near it, and partitions before that day may
+    * legitimately no longer exist ([[enforceRawRetention]]). The first
+    * pass has cursor = Long.MinValue, no finite lower date. Returns the
+    * staged id and every tier's cursor once it is published; None when
+    * nothing is new. */
+  private[graft] def stage(storeKind: String,
+                           tiers: Seq[Long] = Rollup.StandardTiers): Option[(String, Map[Long, Long])] = {
+    val (kind, rawPath) =
+      if (storeKind == CounterKind) (Rollup.Counter, counterRawTierPath)
+      else (Rollup.Histogram, rawTierPath)
     val cursors = tiers.map(readCursor(storeKind, _))
     val from = cursors.min
     spark.catalog.refreshByPath(rawPath)
     val all = TierStore.read(spark, rawPath)
     val raw = (if (from >= 0L) all.where(col("bucket_date") >= lit(TierStore.utcDateOf(from)))
                else all).where(col("bucket_start") > from)
-    val newest = raw.agg(max(col("bucket_start"))).head()
-    if (!newest.isNullAt(0)) {
+    // a top-1, not an aggregate: one Spark job, where `max` plans two
+    raw.select(col("bucket_start")).orderBy(col("bucket_start").desc).limit(1).collect()
+      .headOption.map(_.getLong(0)).flatMap { newest =>
       val spans = tiers.zip(cursors).map { case (d, cursor) =>
-        Rollup.Span.closedAt(d, cursor, newest.getLong(0))
+        Rollup.Span.closedAt(d, cursor, newest)
       }
-      Rollup.cascade(kind, raw.drop("bucket_date"), spans).emit { (span, rows) =>
-        store.append(storeKind, span.durationMs, rows)
-        writeCursor(storeKind, span.durationMs, span.closed)
+      val cascade = Rollup.cascade(kind, raw.drop("bucket_date"), spans)
+      if (cascade.spans.isEmpty) None
+      else {
+        val id = store.stage(storeKind, cascade.spans.map(_.durationMs), cascade.frame)
+        val known = tiers.zip(cursors).filter(_._2 != Long.MinValue)
+        Some(id -> (store.committed(storeKind).fold(Map.empty[Long, Long])(_._2) ++ known ++
+          cascade.spans.map(s => s.durationMs -> s.closed)))
       }
     }
   }
@@ -221,11 +250,14 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
   private def legacyCursorPath(kind: String, d: Long): String =
     if (kind == CounterKind) s"$baseDir/cursor_${d + 1}" else s"$baseDir/cursor_$d"
 
-  /** Read the tier cursor; falls back to the legacy (un-namespaced) file
-    * so an upgraded deployment resumes where it left off instead of
+  /** Read the tier cursor from the kind's commit record. A tier the
+    * record does not name falls back to the per-tier cursor file, then
+    * to the legacy (un-namespaced) one, which older versions wrote, so
+    * an upgraded deployment resumes where it left off instead of
     * re-rolling the whole raw tier into existing tier tables (which
-    * would silently double counts and sketches). The next write lands on
-    * the new path; the legacy file is left behind, inert. */
+    * would silently double counts and sketches). The next commit
+    * carries the value into the record; the old files are left behind,
+    * inert. */
   private[graft] def readCursor(kind: String, d: Long): Long = {
     def read(path: String): Option[Long] = {
       val p = java.nio.file.Paths.get(path)
@@ -233,23 +265,10 @@ class StreamingIngest(spark: SparkSession, baseDir: String,
         Some(new String(java.nio.file.Files.readAllBytes(p)).trim.toLong)
       else None
     }
-    read(cursorPath(kind, d))
+    store.committed(kind).flatMap(_._2.get(d))
+      .orElse(read(s"$baseDir/cursor_${kind}_$d"))
       .orElse(read(legacyCursorPath(kind, d)))
       .getOrElse(Long.MinValue)
-  }
-
-  /** Atomic replace: the value lands in a temp file of the same
-    * directory and is renamed over the cursor. A write killed midway
-    * leaves only the temp file, never a truncated cursor that still
-    * parses — a shorter number would re-roll already-rolled buckets,
-    * doubling counts and merging sketches twice. */
-  private def writeCursor(kind: String, d: Long, v: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val p = Paths.get(cursorPath(kind, d))
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, v.toString.getBytes)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }
 

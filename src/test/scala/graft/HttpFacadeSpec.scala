@@ -302,4 +302,16 @@ class HttpFacadeSpec extends SparkSpec {
       assert(mc == 400)
     }
   }
+
+  test("the facade turns Nagle off: TCP_NODELAY is on before its server is created") {
+    val facade = new HttpFacade(spark,
+      new InfluxPlanner(MaterializedTiers.provider(spark, sf)),
+      new DashboardStore(java.nio.file.Files.createTempDirectory("graft_dash_nodelay").toString))
+    val port = facade.start()
+    try {
+      // the JDK server reads this once, when its configuration loads
+      assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+      assert(get(s"http://localhost:$port/khronus/version") == (200, Version.json))
+    } finally facade.stop()
+  }
 }

@@ -24,6 +24,41 @@ class StoreDoctorSpec extends SparkSpec {
       .toDF("vec_id", "embedding").localCheckpoint()
   }
 
+  /** One staged tier-store increment of kind `tier` (30 s and 1 min
+    * tables) in a fresh store under `base`; returns the store and id. */
+  private def stagedTiers(base: String): (graft.sources.TierStore, String) = {
+    val store = new graft.sources.TierStore(spark, base)
+    val rows = spark.range(4).selectExpr("'m' AS metric", "1704067200000 + id * 60000 AS bucket_start",
+      "id AS count", "IF(id % 2 = 0, 30000L, 60000L) AS tier")
+    (store, store.stage("tier", Seq(30000L, 60000L), rows))
+  }
+
+  test("tier store: a staged increment its commit record names is pending-commit, not deleted") {
+    val base = tmpDir("tier_pending")
+    val (store, id) = stagedTiers(base)
+    store.commit("tier", id, Map(30000L -> 1704067229999L, 60000L -> 1704067259999L))
+    val found = StoreDoctor.diagnose(spark, base)
+    assert(found.map(_.check) == Seq("pending-commit"), s"got $found")
+    assert(found.head.path.endsWith(s"tier.$id.__stage") && found.head.detail.contains("do not delete"))
+    // the next increment's recovery publishes it; the tree is then healthy
+    store.recover("tier")
+    assert(StoreDoctor.diagnose(spark, base).isEmpty)
+    assert(store.readAll("tier", 30000L).count() == 2 && store.readAll("tier", 60000L).count() == 2)
+  }
+
+  test("tier store: a staged increment no commit record names is orphaned-staging") {
+    val base = tmpDir("tier_orphan")
+    val (store, id) = stagedTiers(base)
+    // a record naming an EARLIER increment does not cover this one
+    store.commit("tier", "0-earlier", Map(30000L -> 1L))
+    val found = StoreDoctor.diagnose(spark, base)
+    assert(found.map(_.check) == Seq("orphaned-staging"), s"got $found")
+    assert(found.head.path.endsWith(s"tier.$id.__stage") && found.head.detail.contains("safe to delete"))
+    store.recover("tier")
+    assert(StoreDoctor.diagnose(spark, base).isEmpty)
+    assert(!new java.io.File(store.path("tier", 30000L)).exists())
+  }
+
   test("healthy PqIndexStore diagnoses clean; each planted violation fires its check") {
     val base = tmpDir("pq")
     val store = new PqIndexStore(spark, base, nlist = 4, m = 4, ksub = 8)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import graft.ingest.MetricBatchIngest
 import graft.streaming.StreamingIngest
 import graft.functions.hdr_merge
+import graft.ops.StoreDoctor
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSpec {
@@ -1694,7 +1695,7 @@ class StreamingSpec extends SparkSpec {
     si.runCounterCascadeIncrement(Seq(30000L))
     val cursor = si.readCursor(StreamingIngest.CounterKind, 30000L)
     assert(cursor == T0 + 90000L - 1 && tierRows() == 3L)
-    val tmp = Paths.get(s"$base/cursor_${StreamingIngest.CounterKind}_30000.tmp")
+    val tmp = Paths.get(s"$base/_commit_${StreamingIngest.CounterKind}.tmp")
     assert(!Files.exists(tmp), "a completed write leaves no temp file")
     // a write killed after a partial temp file: a shorter number that
     // still parses, which would re-roll every bucket were it the cursor
@@ -1707,6 +1708,111 @@ class StreamingSpec extends SparkSpec {
     si.runCounterCascadeIncrement(Seq(30000L))
     assert(si.readCursor(StreamingIngest.CounterKind, 30000L) == T0 + 210000L - 1)
     assert(tierRows() == 7L && !Files.exists(tmp))
+  }
+
+  /** Two timers and two counters, one event per 20 s each over
+    * `[from, to)`, dropped into `in` as one file and run through both raw
+    * streams; returns every (metric, ts, value, counter) posted. */
+  private def ingestTick(si: StreamingIngest, stream: org.apache.spark.sql.DataFrame,
+                         in: String, name: String, from: Long,
+                         to: Long): Seq[(String, Long, Long, Boolean)] = {
+    import org.apache.spark.sql.streaming.Trigger
+    val posted = Seq("lat_a" -> "timer", "lat_b" -> "gauge", "req_a" -> "counter", "req_b" -> "counter")
+      .flatMap { case (m, t) =>
+        (from until to by 20000L).map(ts => (m, t, ts + 7, if (t == "counter") 1L + ts / 20000L % 4 else ts / 20000L % 1500))
+      }
+    dropFile(in, s"$name.json", posted.map { case (m, t, ts, v) => line(m, t, ts, Seq(v.toDouble)) })
+    Seq(si.startRawTier(stream, Trigger.AvailableNow()),
+      si.startCounterTier(stream, Trigger.AvailableNow())).foreach(_.awaitTermination())
+    posted.map { case (m, t, ts, v) => (m, ts, v, t == "counter") }
+  }
+
+  test("the tier commit survives a crash after each step: the next increment publishes a committed stage, drops an uncommitted one, rolls nothing twice") {
+    val kinds = Seq(StreamingIngest.HistKind, StreamingIngest.CounterKind)
+    def stagingDirs(base: String): Seq[String] =
+      new java.io.File(base).list().toSeq.filter(_.endsWith(".__stage"))
+    /** The increment of `kind` staged and committed, nothing published. */
+    def committed(si: StreamingIngest, kind: String): String = {
+      val (id, cursors) = si.stage(kind).get
+      si.store.commit(kind, id, cursors)
+      id
+    }
+    /** Moves the first `n(files)` of staged increment `id`'s data files
+      * into their tables, as the publish step does before a crash. */
+    def moveStaged(si: StreamingIngest, base: String, kind: String, id: String)(n: Int => Int): Unit = {
+      val staged = for {
+        t <- new java.io.File(s"$base/$kind.$id.__stage").listFiles().toSeq.filter(_.getName.startsWith("tier="))
+        date <- t.listFiles().toSeq
+        f <- date.listFiles().toSeq
+      } yield (t.getName.stripPrefix("tier=").toLong, date.getName, f)
+      assert(staged.size >= 2, s"$kind staged ${staged.size} files")
+      staged.sortBy(_._3.getName).take(n(staged.size)).foreach { case (d, date, f) =>
+        val dst = Paths.get(si.store.path(kind, d), date)
+        Files.createDirectories(dst)
+        Files.move(f.toPath, dst.resolve(f.getName))
+      }
+    }
+    val kills: Seq[(String, (StreamingIngest, String, String) => Unit)] = Seq(
+      "staged, no record" -> { (si, _, kind) => si.stage(kind) },
+      "record written, no file moved" -> { (si, _, kind) => committed(si, kind) },
+      "record written, half the files moved" -> { (si, base, kind) =>
+        moveStaged(si, base, kind, committed(si, kind))(_ / 2) },
+      "every file moved, staging dir left" -> { (si, base, kind) =>
+        moveStaged(si, base, kind, committed(si, kind))(identity) })
+    kills.foreach { case (step, kill) =>
+      withClue(s"killed at \"$step\": ") {
+        val base = Files.createTempDirectory("graft_commit_kill").toString
+        val in = s"$base/in"
+        Files.createDirectories(Paths.get(in))
+        val si = new StreamingIngest(spark, base)
+        val stream = si.readJsonStream(in)
+        val H = 3600000L
+        val posted = ingestTick(si, stream, in, "t0", T0, T0 + 2 * H) ++ {
+          si.runCascadeIncrement(); si.runCounterCascadeIncrement()
+          ingestTick(si, stream, in, "t1", T0 + 2 * H, T0 + 4 * H)
+        }
+        kinds.foreach(kill(si, base, _))
+        assert(stagingDirs(base).size == 2)
+        if (step != "staged, no record")
+          assert(StoreDoctor.diagnose(spark, base).map(_.check).count(_ == "pending-commit") == 2)
+        val more = ingestTick(si, stream, in, "t2", T0 + 4 * H, T0 + 6 * H)
+        si.runCascadeIncrement()
+        si.runCounterCascadeIncrement()
+        assert(stagingDirs(base).isEmpty, "a staging dir outlived the next increment")
+        assert(si.readCursor(StreamingIngest.HistKind, H) == T0 + 5 * H - 1)
+        assertTiersEqualBatch(si, posted ++ more)
+      }
+    }
+  }
+
+  test("job-count guard: one cascade increment per kind stays within 5 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft_cascade_jobs").toString
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    val si = new StreamingIngest(spark, base)
+    ingestTick(si, si.readJsonStream(in), in, "t0", T0, T0 + 2 * 3600000L)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val (hist, counter) = try {
+      si.runCascadeIncrement()
+      org.apache.spark.ListenerBusDrain(sc)
+      val h = jobs.getAndSet(0)
+      si.runCounterCascadeIncrement()
+      org.apache.spark.ListenerBusDrain(sc)
+      (h, jobs.get)
+    } finally sc.removeSparkListener(listener)
+    // every standard tier closed a bucket, so each kind wrote six tables
+    graft.rollup.Rollup.StandardTiers.foreach { d =>
+      assert(si.readCursor(StreamingIngest.HistKind, d) > T0)
+      assert(si.readCursor(StreamingIngest.CounterKind, d) > T0)
+    }
+    assert(hist <= 5 && counter <= 5, s"jobs per increment: hist $hist, counter $counter")
   }
 
   /** Every tier of both kinds in `si`'s store equals the plain batch
